@@ -38,8 +38,8 @@ object Css {
     // element per selector evaluation (every descendant of the context on
     // a selectAll), so building these per CALL allocated two collections
     // per node visit — measured as a leading allocator of the extraction
-    // hot path (ParseBench). Parse results are memoized, so this runs
-    // once per distinct selector string.
+    // hot path (round-6 allocation profile). Parse results are memoized,
+    // so this runs once per distinct selector string.
     val all: Array[Compound] = (head :: rest.map(_._2)).toArray
     val combs: Array[Char] = rest.map(_._1).toArray
   }
@@ -249,9 +249,9 @@ object Css {
     * Direct recursive walk rather than the `descendants` Iterator: the
     * lazy iterator allocates a Stack plus a reverseIterator per visited
     * element, and select calls run ~16× per page in the extraction hot
-    * path (ParseBench measured the iterator machinery as a leading
-    * allocator). Document order and the Deadline poll per visited element
-    * are preserved.
+    * path (the round-6 allocation profile measured the iterator machinery
+    * as a leading allocator). Document order and the Deadline poll per
+    * visited element are preserved.
     */
   def selectAll(context: HElem, selector: String): Vector[HElem] =
     selectAll(context, parse(selector))

@@ -45,8 +45,14 @@ final class Crawler(
     * executor loss of the locally-checkpointed shard blocks mid-crawl —
     * the loop must recover by rebuilding from `seen`, not fail.
     */
-  @volatile private[graft] var liveShards:
-      Option[org.apache.spark.rdd.RDD[(Int, (CuckooFilter, SeenShard))]] = None
+  @volatile private[graft] var liveShards: Option[SeenSet.Shards] = None
+
+  /** Partitions for a frontier of `rows` driver-known rows: one per
+    * [[Crawler.FrontierRowsPerPartition]], capped at the default parallelism.
+    */
+  private def partitionsFor(rows: Long): Int =
+    math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
+      (rows + FrontierRowsPerPartition - 1) / FrontierRowsPerPartition)).toInt
 
   /** `Rabida.Crawl` (`svc.go:93-101`): paginated crawl over seeds sharing
     * one Job shape. Default seed list = the job's own link
@@ -242,37 +248,11 @@ final class Crawler(
         // stages of near-empty overhead (guide §2.2). Narrow read of the
         // cached blocks, no extra job; the dropped partitioning claim is
         // worthless at these sizes (the batch broadcasts anyway).
-        val seedParts = math.max(1L, math.min(
-          spark.sparkContext.defaultParallelism.toLong,
-          (n + config.frontierRowsPerPartition - 1) / config.frontierRowsPerPartition)).toInt
+        val seedParts = partitionsFor(n)
         frontier = if (chk.rdd.getNumPartitions > seedParts) chk.coalesce(seedParts) else chk
         frontierCount = n
     }
-    // materialize the snapshot's seen union OFF the store's parquet files
-    // (fused with the size count the resume needs anyway): the first
-    // post-resume compaction GCs the superseded delta dirs, and a lazy
-    // `seen` plan would rescan those now-deleted paths on every later
-    // anti-join / sketch backfill. One O(|seen|) job, once per resume —
-    // the same cost the old resume-time seen.count() already paid, and it
-    // also stops every later round re-reading the whole delta chain.
-    // Durability model: the checkpointed blocks are executor-resident, so
-    // an executor death that takes them mid-crawl fail-stops through the
-    // BlockLossUnrecoverable path below with a resume pointer — and
-    // re-resume is always sound, because the store's manifest at that
-    // moment lists only live dirs (compaction GC'd dirs are never in the
-    // current manifest). Fail-stop + durable re-resume replaces the old
-    // lazy plan's silent FileNotFound crash after compaction.
-    val resumedSeen: Option[(DataFrame, Long)] =
-      resumed.map(s => B.localCheckpointWithCount(s.seen))
-    var seen: DataFrame = resumedSeen match {
-      case Some((df, _)) => df
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("seed_id", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("url_hash", org.apache.spark.sql.types.LongType))))
-    }
+    val seen = new SeenSet(spark, config, prefilterSkipped, s => liveShards = s, resumed.map(_.seen))
     var round = resumed.map(_.round).getOrElse(0)
     val perRound = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // persisted-pages replay (Config.persistPages): pre-crash rounds'
@@ -282,149 +262,7 @@ final class Crawler(
     if (config.persistPages)
       for (st <- store; snap <- resumed; pre <- st.loadPages(snap.round))
         perRound += pre
-
-    // async snapshot commits: round N's parquet write + manifest rename
-    // overlap round N+1's compute (Spark schedules jobs from both threads
-    // concurrently). Single-threaded pool → commits stay ordered, the
-    // manifest ATOMIC_MOVE remains the crash-safe commit point; failures
-    // surface when the futures are drained before run() returns.
-    val commitPool = store.map(_ => java.util.concurrent.Executors.newSingleThreadExecutor(
-      (r: Runnable) => { val t = new Thread(r, "graft-frontier-commit"); t.setDaemon(true); t }))
-    val commitFutures = scala.collection.mutable.ArrayBuffer[java.util.concurrent.Future[_]]()
-    def drainCommits(): Unit =
-      try commitFutures.foreach(_.get()) // rethrows any commit failure
-      finally {
-        commitFutures.clear()
-        commitPool.foreach(_.shutdown())
-      }
-    // fail fast each round: a snapshot commit that already failed aborts
-    // the crawl now instead of after all later rounds committed newer
-    // manifests (the single-threaded pool keeps commit order, so a failed
-    // round-N commit means no round>N manifest has been renamed yet)
-    def pollCommits(): Unit = {
-      val done = commitFutures.filter(_.isDone)
-      done.foreach(_.get()) // rethrows the first failure
-      commitFutures --= done
-    }
-
-    // partitioned cuckoo-filter URL-seen set (north star): one filter per
-    // pmod(url_hash, hostBuckets) shard. Shards are built DISTRIBUTEDLY
-    // (aggregateByKey: per-partition inserts, compact blob merge) and —
-    // r4 — RESIDE ON THE EXECUTORS between rounds as a hash-partitioned,
-    // locally-checkpointed RDD[(shard, (cuckoo, exact))]: no driver collect, no
-    // per-round shard-map broadcast, so driver memory and per-round cost
-    // stay flat as the seen set grows to 10^8+ urls. Only the round's new
-    // urls are merged in (narrow fullOuterJoin — both sides share the
-    // shard partitioner) — except the first active round (or resume),
-    // which backfills from the full seen set so the sketch can never
-    // false-negative. The merge itself is LAZY: it materializes inside the
-    // same job that checkpoints the round's frontier, adding zero driver
-    // jobs per round.
-    // r4b: each shard pairs the cuckoo SKETCH (2 B/url, cache-friendly
-    // probe) with an EXACT SeenShard ((seed-hash, url-hash) pair set,
-    // 16 B/url — ~160 GB fleet-wide at 10^10 urls). The exact shard
-    // REPLACES the per-round residue anti-join, which had to shuffle the
-    // ENTIRE cumulative seen table every round (a union tree carries no
-    // stable partitioning) — the last per-round O(|seen|) term in the
-    // loop. Probe order: bloom (broadcast, no shuffle) → cuckoo (fast
-    // reject for definitely-new) → exact shard (authoritative), all after
-    // ONE exchange by shard.
-    val cuckooPartitioner = new org.apache.spark.HashPartitioner(config.hostBuckets)
-    var cuckooRdd: Option[org.apache.spark.rdd.RDD[(Int, (CuckooFilter, SeenShard))]] = None
-    var cuckooPrev: Option[org.apache.spark.rdd.RDD[(Int, (CuckooFilter, SeenShard))]] = None
-    var cuckooPrimed = false
-
-    // incremental broadcast bloom: rebuilding from the FULL seen set every
-    // round is O(total × rounds) at 10^10 urls. Instead the filter is
-    // primed once at 2× the current seen size, per-round deltas are built
-    // over just the batch (round-sized, parallel) and OR-merged in, and the
-    // filter re-primes from full seen only when outgrown — exponentially
-    // spaced, so full scans amortize to O(total) over the whole crawl.
-    var bloomFilter: Option[org.apache.spark.util.sketch.BloomFilter] = None
-    var bloomCapacity = 0L
-    def cuckooActive(se: Long): Boolean = se > config.cuckooThreshold
-    def insertIntoCuckoo(df: DataFrame): Unit = {
-      val nShards = config.hostBuckets
-      val cap = config.cuckooCapacityPerShard
-      def freshPair() = (CuckooFilter.create(cap), SeenShard.create())
-      val delta = df
-        .select(pmod(col("url_hash"), lit(nShards)).cast("int").as("shard"),
-          col("seed_id"), col("url_hash"))
-        .rdd.map(r => (r.getInt(0), (SeenShard.seedHash(r.getString(1)), r.getLong(2))))
-        .aggregateByKey(freshPair(), cuckooPartitioner)(
-          { case ((f, e), (sh, uh)) => f.insert(uh); e.insert(sh, uh); (f, e) },
-          { case ((fa, ea), (fb, eb)) => (fa.merge(fb), ea.merge(eb)) })
-      val merged = cuckooRdd match {
-        case None => delta
-        case Some(prev) =>
-          // same partitioner on both sides → narrow join, shard-local
-          // merge. COPY-ON-WRITE: `a` is an object served from the
-          // PREVIOUS generation's cached block — merging in place would
-          // mutate that block, so a task retry / speculative duplicate
-          // re-executing this partition would re-apply the
-          // non-idempotent merge (CuckooFilter.merge re-inserts every
-          // fingerprint, inflating load toward the stash) and a
-          // concurrent reader could observe a SeenShard mid-grow. Deep
-          // copy before merging; `b` (the round delta) is freshly
-          // aggregated per execution and safe to alias.
-          prev.fullOuterJoin(delta, cuckooPartitioner).mapValues {
-            case (Some(a), Some(b)) => (a._1.copy().merge(b._1), a._2.copy().merge(b._2))
-            case (Some(a), None)    => a
-            case (None, Some(b))    => b
-            case (None, None)       => freshPair()
-          }
-      }
-      merged.setName(s"graft-cuckoo-shards")
-      // shard residency policy first (MEMORY_AND_DISK default: an outgrown
-      // shard spills to executor-local disk instead of failing)...
-      merged.persist(org.apache.spark.storage.StorageLevel.fromString(config.shardStorageLevel))
-      // ...then truncate lineage at first materialization — honored via the
-      // checkpointAllMarkedAncestors local property set in run() (without
-      // it this mark is never acted on). The durable URL-seen authority
-      // remains the checkpointed `seen` table — on executor loss the
-      // filters rebuild from it via the same backfill path used on resume
-      // (see the block-loss recovery around the round's frontier
-      // checkpoint).
-      merged.localCheckpoint()
-      cuckooPrev = cuckooRdd
-      cuckooRdd = Some(merged)
-      liveShards = cuckooRdd
-    }
-    // probe rows map-side against the co-partitioned shards, ONE exchange
-    // by shard: cuckoo first (a definitely-new verdict counts toward the
-    // sketch-pruning metric, as before), then the EXACT shard decides the
-    // cuckoo-maybes — so the round needs NO residue anti-join against the
-    // cumulative seen table at all. Returns the surviving (not-seen) rows.
-    def cuckooProbeNew(df: DataFrame): DataFrame = {
-      val nShards = config.hostBuckets
-      val schema = df.schema
-      val hIdx = schema.fieldIndex("url_hash")
-      val sIdx = schema.fieldIndex("seed_id")
-      val acc = prefilterSkipped
-      val shards = cuckooRdd.get
-      val fresh = df.rdd
-        .map(r => ((((r.getLong(hIdx) % nShards) + nShards) % nShards).toInt, r))
-        .partitionBy(cuckooPartitioner)
-        .zipPartitions(shards, preservesPartitioning = false) { (rows, fs) =>
-          val filters = fs.toMap
-          rows.flatMap { case (shard, row) =>
-            filters.get(shard) match {
-              case None => { acc.add(1L); Some(row) } // empty shard: new
-              case Some((cuckoo, exact)) =>
-                val uh = row.getLong(hIdx)
-                if (!cuckoo.contains(uh)) { acc.add(1L); Some(row) }
-                else if (!exact.contains(SeenShard.seedHash(row.getString(sIdx)), uh)) Some(row)
-                else None // exactly seen — drop
-            }
-          }
-        }
-      spark.createDataFrame(fresh, schema)
-    }
-
-    // driver-side running size of the seen set — avoids a count() job per
-    // round (successor batches are disjoint from seen by construction, so
-    // the estimate is exact)
-    var seenEstimate = resumedSeen.map(_._2).getOrElse(0L)
+    val committer = store.map(new SnapshotCommitter(_, config.persistPages))
     var aborted = false
 
     // S6: deterministic per-url user-agent assignment from a broadcast
@@ -436,11 +274,11 @@ final class Crawler(
     try {
     while (round < config.maxRounds && frontierCount > 0 && !aborted) {
       round += 1
-      pollCommits()
+      committer.foreach(_.poll())
       // priority frontier: when a batch limit is set, take the highest-
       // priority slice ordered by (priority, host_bucket) — the north-star
       // frontier discipline; default is the full lockstep BFS round
-      val (batch0, remainder, batchCount) = config.batchLimit match {
+      val (batch, remainder, batchCount) = config.batchLimit match {
         case Some(n) if frontierCount > n =>
           // lazy boundary, not an eager checkpoint (same r4 serial-floor
           // lever as extraction): the fetch join's broadcast build is the
@@ -465,12 +303,11 @@ final class Crawler(
           // both sides pay an exchange)
           val bKeys = b.select("seed_id", "url")
           val rest = frontier.join(
-            if (n <= config.broadcastJoinRows) broadcast(bKeys) else bKeys,
+            if (n <= BroadcastJoinRows) broadcast(bKeys) else bKeys,
             Seq("seed_id", "url"), "left_anti")
           (b, rest, n)
         case _ => (frontier, spark.emptyDataFrame, frontierCount)
       }
-      val batch = batch0
 
       // fetch = scan-join; broadcast the (small) frontier batch so the big
       // corpus never shuffles (SURVEY.md S1). At 10^10-frontier scale the
@@ -605,35 +442,8 @@ final class Crawler(
       // L10 abort via callback (`svcimpl.go:402-404,487-489`)
       aborted = callback.exists(cb => cb(round, pages))
 
-      // mark fetched urls seen (per-seed, matching per-Job independence of
-      // the reference; SURVEY.md §2.5 set-ops row). Batches are disjoint
-      // from prior seen (anti-joined at successor time) → plain union.
-      // no checkpoint here: `batch` is already checkpointed (it IS the
-      // frontier slice), so `seen` stays a shallow union tree over
-      // materialized nodes — planning cost O(rounds), and one fewer
-      // eager driver job per round (the per-round serial floor is the
-      // scaling limiter, BASELINE.md round 2)
-      val newSeen = batch.select(col("seed_id"), col("url_hash"))
-      seen = seen.union(newSeen)
-      seenEstimate += batchCount
-
-      if (cuckooActive(seenEstimate)) {
-        // first active round (incl. resume) backfills ALL of seen; after
-        // that only the round's batch is inserted
-        insertIntoCuckoo(if (cuckooPrimed) newSeen else seen)
-        cuckooPrimed = true
-      }
-
-      if (seenEstimate > config.bloomThreshold) {
-        if (bloomFilter.isEmpty || seenEstimate > bloomCapacity) {
-          bloomCapacity = math.max(seenEstimate * 2, 1000L)
-          bloomFilter = Some(seen.stat.bloomFilter("url_hash", bloomCapacity, 0.01))
-        } else {
-          // same capacity+fpp → bit-compatible; OR-merge the round's delta
-          bloomFilter.foreach(
-            _.mergeInPlace(newSeen.stat.bloomFilter("url_hash", bloomCapacity, 0.01)))
-        }
-      }
+      // mark fetched urls seen; the shard and bloom deltas ride along
+      val newSeen = seen.add(batch, batchCount)
 
       // successor generation: L2 (no paginator → next empty), L3 (condition
       // goon), L10 (limit abort), self-loop guard, robots, URL-seen anti-join
@@ -649,198 +459,48 @@ final class Crawler(
         .dropDuplicates("seed_id", "url")
       val succHashed = enrich(robotsFilter(rawSucc), col("succ_priority")).drop("succ_priority")
 
-      // URL-seen dedup: the broadcast bloom (global, fixed-capacity,
-      // NO shuffle) first splits off definitely-new successors; the
-      // bloom-maybes then go through the executor-resident shards —
-      // cuckoo sketch fast-reject, exact (seed-hash, url-hash) pair set
-      // as the authority — after ONE exchange by url-hash shard. The
-      // exact shards make a per-round anti-join against the cumulative
-      // seen table unnecessary (that join re-shuffled ALL of seen every
-      // round: a union tree carries no stable partitioning — the last
-      // per-round O(|seen|) term in the loop). Below the activation
-      // thresholds the plain anti-join remains (at small seen sizes it
-      // is cheaper than maintaining the shard structures).
-      val bloomOpt = bloomFilter.map(spark.sparkContext.broadcast(_))
-      // successor dedup + frontier checkpoint as a (re)buildable plan: the
-      // plan captures the CURRENT shard RDD, so the block-loss recovery
-      // below can rebuild the shards from `seen` and re-plan.
-      def dedupAndCheckpoint(): (DataFrame, Long) = {
-        val cuckooOn = cuckooPrimed && cuckooRdd.nonEmpty
-        // seen's row count is DRIVER-KNOWN (seenEstimate is exact —
-        // batches are disjoint from prior seen): below the threshold,
-        // broadcast the seen side of the anti-join so neither side pays
-        // an exchange (guide §3.1 — checkpointed leaves have no stats,
-        // so the planner can never choose this itself; the successor
-        // side then stays fused with the extraction stage). Above it,
-        // the previous sort-merge shape — and past cuckooThreshold the
-        // executor-resident shards replace this join entirely.
-        def seenSide: DataFrame =
-          if (seenEstimate <= config.broadcastJoinRows) broadcast(seen) else seen
-        val preFiltered =
-          if (!cuckooOn) {
-            val base = bloomOpt match {
-              case Some(bc) =>
-                val acc = prefilterSkipped
-                // reject branch counts; each bloom-skipped row increments
-                // the accumulator exactly once
-                val rejectCounted = udf { (h: Long) =>
-                  val might = bc.value.mightContain(h)
-                  if (!might) acc.add(1L)
-                  might
-                }
-                val quiet = udf((h: Long) => bc.value.mightContain(h))
-                val bloomNew = succHashed.filter(!rejectCounted(col("url_hash")))
-                bloomNew.unionByName(
-                  succHashed.filter(quiet(col("url_hash")))
-                    .join(seenSide, Seq("seed_id", "url_hash"), "left_anti"))
-              case None =>
-                succHashed.join(seenSide, Seq("seed_id", "url_hash"), "left_anti")
-            }
-            base
-          } else {
-            val acc = prefilterSkipped
-            val (bloomNew, bloomMaybe) = bloomOpt match {
-              case Some(bc) =>
-                val rejectCounted = udf { (h: Long) =>
-                  val might = bc.value.mightContain(h)
-                  if (!might) acc.add(1L)
-                  might
-                }
-                val quiet = udf((h: Long) => bc.value.mightContain(h))
-                (succHashed.filter(!rejectCounted(col("url_hash"))),
-                  succHashed.filter(quiet(col("url_hash"))))
-              case None => (spark.emptyDataFrame, succHashed)
-            }
-            val shardNew = cuckooProbeNew(bloomMaybe)
-            if (bloomNew.columns.nonEmpty) shardNew.unionByName(bloomNew) else shardNew
-          }
-
-        val succ = preFiltered.select("seed_id", "url", "page_no", "cursor",
+      // the next frontier's row count is bounded by DRIVER-KNOWN counts
+      // (successors ≤ batch — one next_page_url per page — plus the
+      // remainder): cap the checkpoint's partitions so a small frontier
+      // lands in few partitions instead of 32 near-empty ones every
+      // downstream stage then pays for (guide §2.2); large frontiers keep
+      // full parallelism and the partitioning-preserving wrap
+      val remainderCount = frontierCount - batchCount
+      val maxParts = partitionsFor(batchCount + math.max(0L, remainderCount))
+      // successor dedup + frontier checkpoint + loop-control count, ONE
+      // driver job; re-planned if a shard block was lost
+      val (chk, n) = seen.recovering(round) {
+        val succ = seen.dropSeen(succHashed).select("seed_id", "url", "page_no", "cursor",
           "host", "url_hash", "host_bucket", "priority")
-        // the next frontier's row count is bounded by DRIVER-KNOWN counts
-        // (successors ≤ batch — one next_page_url per page — plus the
-        // remainder): cap the checkpoint's partitions so a small frontier
-        // lands in few partitions instead of 32 near-empty ones every
-        // downstream stage then pays for (guide §2.2); large frontiers
-        // keep full parallelism and the partitioning-preserving wrap
-        val remainderCount = frontierCount - batchCount
-        val bound = batchCount + math.max(0L, remainderCount)
-        val maxParts = math.max(1L, math.min(
-          spark.sparkContext.defaultParallelism.toLong,
-          (bound + config.frontierRowsPerPartition - 1) / config.frontierRowsPerPartition)).toInt
         // a successor may already be QUEUED (in the unfetched remainder)
         // even though not yet seen — anti-join against the remainder too,
         // keeping the earlier-queued row (BFS order), so no url is fetched
-        // twice. checkpoint + loop-control count, one driver job
+        // twice
         B.localCheckpointWithCount(
           if (batchCount < frontierCount) {
             val rKeys = remainder.select("seed_id", "url_hash")
             remainder.unionByName(
               succ.join(
-                if (remainderCount <= config.broadcastJoinRows) broadcast(rKeys) else rKeys,
+                if (remainderCount <= BroadcastJoinRows) broadcast(rKeys) else rKeys,
                 Seq("seed_id", "url_hash"), "left_anti"))
           } else succ,
           maxParts)
       }
-      // mid-crawl SHARD-loss recovery: the shard RDD is locally
-      // checkpointed (lineage truncated), so losing one of its blocks —
-      // eviction, disk failure, or an executor death whose other blocks
-      // survived — fails the round's job instead of recomputing. The
-      // in-memory authority is the `seen` table: drop the dead shard
-      // generation, rebuild the shards from `seen` via the same backfill
-      // path resume uses, and re-run the round's checkpoint. SCOPE: this
-      // recovers exactly the case where `seen`'s own backing blocks are
-      // intact. A real executor death usually takes frontier/batch blocks
-      // (also locally checkpointed) down with the shards — then the
-      // rebuild fails the same way, and the sound recovery is the durable
-      // store: the second-level catch drains pending snapshot commits (so
-      // the on-disk manifest chain is consistent through the last
-      // committed round) and fails with an actionable resume pointer
-      // instead of a raw block-loss stack.
-      val skippedBeforeAttempt = prefilterSkipped.value
-      val (chk, n) =
-        try dedupAndCheckpoint()
-        catch {
-          case t: Throwable if cuckooPrimed && cuckooRdd.nonEmpty && Crawler.looksLikeBlockLoss(t) =>
-            cuckooRdd.foreach(_.unpersist(blocking = false))
-            cuckooPrev.foreach(_.unpersist(blocking = false))
-            cuckooRdd = None
-            cuckooPrev = None
-            // Spark applies accumulator updates from the failed attempt's
-            // SUCCESSFUL tasks; the retry re-runs the whole plan, so
-            // without a reset the pruning metric double-counts. KNOWN
-            // NARROW RACE: a straggler task of the failed attempt whose
-            // success event lands AFTER this reset still re-inflates the
-            // count — bounded by one attempt's tasks, diagnostic-only (the
-            // metric gates nothing), and not worth serializing the
-            // DAGScheduler event loop to close.
-            prefilterSkipped.reset()
-            prefilterSkipped.add(skippedBeforeAttempt)
-            insertIntoCuckoo(seen) // full backfill: seen already includes this round's batch
-            try dedupAndCheckpoint()
-            catch {
-              case t2: Throwable if Crawler.looksLikeBlockLoss(t2) =>
-                t2.addSuppressed(t)
-                throw new Crawler.BlockLossUnrecoverable(
-                  config.checkpointDir match {
-                    case Some(d) =>
-                      s"executor loss took the crawl's in-memory state (seen/frontier blocks), " +
-                        s"not just the URL-seen shards; in-process rebuild is impossible. " +
-                        s"Durable snapshots at '$d' are consistent — re-invoke crawl with the " +
-                        s"same checkpointDir to resume from round ${round - 1}."
-                    case None =>
-                      "executor loss took the crawl's in-memory state (seen/frontier blocks), " +
-                        "not just the URL-seen shards; in-process rebuild is impossible and no " +
-                        "checkpointDir is configured. Set Config.checkpointDir to make " +
-                        "mid-crawl executor loss resumable."
-                  }, t2)
-            }
-        }
       frontier = chk
       frontierCount = n
-
       // the checkpoint job above materialized this round's shard merge
-      // and probe (they feed the frontier plan) — release the superseded
-      // shard generation
-      cuckooPrev.foreach(_.unpersist(blocking = false))
-      cuckooPrev = None
+      seen.releasePrevious()
 
-      store.foreach { st =>
-        // capture this round's immutable frames/counters for the async
-        // task. ONLY the round's newly-seen delta ships to the store —
-        // the store appends it as a per-round delta file and unions the
-        // manifest-listed deltas on resume, so commit work per round is
-        // O(batch), never O(|seen|) (the r4 verdict's last per-round
-        // O(|seen|) term).
-        val (cRound, cFrontier, cNewSeen, cPages) = (round, frontier, newSeen, pages)
-        val (cBatch, cFrontierNext, cSeenTotal) = (batchCount, frontierCount, seenEstimate)
-        commitFutures += commitPool.get.submit(new Runnable {
-          def run(): Unit = {
-            val partMetrics = cPages.groupBy(spark_partition_id().as("p")).count()
-              .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-            val fetchedCount = cPages.count()
-            // pages snapshot rides the same ordered commit, BEFORE the
-            // manifest rename (committed manifest => pages dir complete);
-            // reads the round's already-cached lazyCache blocks
-            if (config.persistPages) st.commitPages(cRound, cPages)
-            st.commit(cRound, cFrontier, cNewSeen,
-              Seq("pages_fetched" -> fetchedCount,
-                // fetch misses (url absent from corpus ≙ 404/timeout lineage)
-                "pages_missing" -> (cBatch - fetchedCount),
-                "frontier_next" -> cFrontierNext,
-                "seen_total" -> cSeenTotal),
-              partMetrics)
-          }
-        })
-      }
+      committer.foreach(_.submit(round, frontier, newSeen, pages,
+        batchCount, frontierCount, seen.size))
     }
-    drainCommits()
+    committer.foreach(_.drain())
     } catch {
       case t: Throwable =>
         // a round failed: still await queued commits so (a) no async write
         // races the caller's cleanup and (b) a commit failure surfaces as
         // a suppressed exception instead of vanishing
-        try drainCommits()
+        try committer.foreach(_.drain())
         catch { case c: Throwable if c ne t => t.addSuppressed(c) }
         throw t
     } finally spark.sparkContext.setLocalProperty(markAllKey, prevMarkAll)
@@ -974,6 +634,23 @@ object Crawler {
     false
   }
 
+  /** Deliberate join strategy from driver-known row counts (guide §3.1):
+    * anti-join sides at or below this many rows are broadcast-hinted
+    * (checkpointed/persisted leaves carry no size stats, so the planner can
+    * never pick broadcast itself and defaults both sides into a sort-merge
+    * exchange). ~50 B/row ⇒ the broadcast is capped near 25 MB; above it
+    * the sort-merge shape is kept (and past `cuckooThreshold` the URL-seen
+    * shards replace the seen join entirely).
+    */
+  private[engine] val BroadcastJoinRows: Long = 500000L
+
+  /** Partition-cap granularity for frontier checkpoints (guide §2.2
+    * "fewer, larger map tasks"): partitions are sized to hold this many
+    * frontier rows, so a 5k-url round checkpoints into ONE partition while
+    * a 10^7-url round keeps every core busy.
+    */
+  private[engine] val FrontierRowsPerPartition: Long = 50000L
+
   final case class Config(
       politeness: Politeness.Config = Politeness.Config(),
       maxRounds: Int = 64,
@@ -996,28 +673,13 @@ object Crawler {
       // action + double scan per round costs more than it saves
       bloomThreshold: Long = 10000000L,
       // partitioned cuckoo URL-seen shards activate past this seen-set size
-      // (north star pairs them with the bloom); capacity sizes each shard's
-      // table — overflow degrades to the victim stash, never false-negates
+      // (north star pairs them with the bloom; see SeenSet)
       cuckooThreshold: Long = 10000000L,
-      cuckooCapacityPerShard: Long = 1L << 18,
       // storage level for the executor-resident URL-seen shard RDD;
       // MEMORY_AND_DISK lets an outgrown shard spill to executor-local
-      // disk instead of failing (see SeenShard scaladoc sizing math).
+      // disk instead of failing (per-url shard sizes: see SeenSet).
       // Tests force "DISK_ONLY" to prove the crawl survives spilled shards.
       shardStorageLevel: String = "MEMORY_AND_DISK",
-      // deliberate join strategy from driver-known row counts (guide §3.1):
-      // anti-join sides at or below this many rows are broadcast-hinted
-      // (checkpointed/persisted leaves carry no size stats, so the planner
-      // can never pick broadcast itself and defaults both sides into a
-      // sort-merge exchange). ~50 B/row ⇒ the default caps the broadcast
-      // near 25 MB; above it the r5 sort-merge shape is kept (and past
-      // cuckooThreshold the shards replace the seen join entirely)
-      broadcastJoinRows: Long = 500000L,
-      // partition-cap granularity for the per-round frontier checkpoint
-      // (guide §2.2 "fewer, larger map tasks"): partitions are sized to
-      // hold this many frontier rows, so a 5k-url round checkpoints into
-      // ONE partition while a 10^7-url round keeps every core busy
-      frontierRowsPerPartition: Long = 50000L,
       // pluggable fetch stage: None = the default fused corpus scan-join
       // (fetch before schedule — a miss consumes no politeness slot);
       // Some(f) = politeness schedules + paces FIRST, then f.fetch() runs

@@ -196,14 +196,15 @@ object HtmlParser {
             var j = i + 2
             while (j < n && s.charAt(j) != '>') j += 1
             // legacy semantics `substring.trim.toLowerCase.takeWhile(!ws)`
-            // as region arithmetic: trim both ends, then cut at the first
-            // interior whitespace — the name region interns without
+            // as region arithmetic: trim both ends the way String.trim does
+            // (every char <= ' ', control chars included), then cut at the
+            // first interior whitespace — the name region interns without
             // allocating (toLowerCase never introduces whitespace, so
             // folding before or after the cut is equivalent)
             var from = i + 2
             var until = j
-            while (from < until && s.charAt(from).isWhitespace) from += 1
-            while (until > from && s.charAt(until - 1).isWhitespace) until -= 1
+            while (from < until && s.charAt(from) <= ' ') from += 1
+            while (until > from && s.charAt(until - 1) <= ' ') until -= 1
             var cut = from
             while (cut < until && !s.charAt(cut).isWhitespace) cut += 1
             if (cut > from) out.close(NameIntern.of(s, from, cut))

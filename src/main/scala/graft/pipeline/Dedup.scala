@@ -126,22 +126,6 @@ object Dedup {
   // overflows LongType under Spark 4's default ANSI mode
   private val MersennePrime = (1L << 31) - 1
 
-  /** MinHash signatures: 128 permutations h_i(x) = (a_i·x + b_i) mod p over
-    * xxhash64 shingle hashes (Broder's min-wise independent permutations;
-    * seeds fixed → deterministic).
-    */
-  def minhashSignatures(docs: DataFrame, k: Int = 3, numPerm: Int = 128): DataFrame = {
-    val rng = new java.util.Random(42)
-    val perms = Array.fill(numPerm)((math.abs(rng.nextLong()) % MersennePrime max 1L,
-      math.abs(rng.nextLong()) % MersennePrime))
-    val sh = shingles(docs, k)
-      .withColumn("h", pmod(xxhash64(col("shingle")), lit(MersennePrime)))
-    val aggs = perms.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * lit(a) + lit(b), lit(MersennePrime))).as(s"mh$i")
-    }
-    sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
   /** xxhash64 of a string, identical to the SQL `xxhash64(col)` (seed 42) —
     * shingle-hash parity between the columnar ops ([[shingles]]-based) and
     * the one-pass UDF paths below.
@@ -235,11 +219,8 @@ object Dedup {
     set.toArray
   }
 
-  /** Profiling/diagnostics access to [[shingleHashes]]. */
+  /** Test access to [[shingleHashes]] (MinhashParitySpec). */
   private[graft] def shingleHashesPublic(text: String, k: Int): Array[Long] = shingleHashes(text, k)
-
-  private[graft] def minhashUdfPublic(k: Int, numPerm: Int, bands: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = minhashUdf(k, numPerm, bands)
 
   private def permsFor(numPerm: Int): (Array[Long], Array[Long]) = {
     val rng = new java.util.Random(42)
@@ -254,59 +235,11 @@ object Dedup {
     (a, b)
   }
 
-  /** (doc_id, band, sig) LSH bucket rows: one pass per doc computes the
-    * 128-perm signature AND folds it into `bands` band hashes inside a
-    * single UDF — no shingle explode, no 128 separate min-aggregations.
-    */
-  def bandBuckets(docs: DataFrame, k: Int, numPerm: Int, bands: Int): DataFrame =
-    docs.select(col("doc_id"), explode(minhashUdf(k, numPerm, bands)(col("text"))).as("e"))
-      .select(col("doc_id"), col("e._1").as("band"), col("e._2").as("sig"))
-
-  /** One-pass minhash UDF: text → one element per band of
-    * (band index, band bucket hash, full signature). The signature rides
-    * along each band row because stage 2 of [[minhashLshPairs]] prescreens
-    * pairs inside the bucket group; components are mins mod the Mersenne
-    * prime. The UDF output is consumed by a single `explode`, so the
-    * signature pass runs exactly once per doc by construction.
-    */
-  private def minhashUdf(k: Int, numPerm: Int, bands: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val rows = numPerm / bands
-    val (pa, pb) = permsFor(numPerm)
-    val kk = k
-    udf { (text: String) =>
-      val hs = shingleHashes(text, kk)
-      val sig = Array.fill(numPerm)(Long.MaxValue)
-      var s = 0
-      while (s < hs.length) {
-        val h = ((hs(s) % MersennePrime) + MersennePrime) % MersennePrime
-        var p = 0
-        while (p < numPerm) {
-          val v = (h * pa(p) + pb(p)) % MersennePrime
-          if (v < sig(p)) sig(p) = v
-          p += 1
-        }
-        s += 1
-      }
-      // 64-bit FNV-1a fold of each band's rows — band ids only need equality
-      Array.tabulate(bands) { b =>
-        var h = 0xcbf29ce484222325L
-        var r = 0
-        while (r < rows) {
-          var v = sig(b * rows + r)
-          var byte = 0
-          while (byte < 8) { h ^= (v & 0xffL); h *= 0x100000001b3L; v >>>= 8; byte += 1 }
-          r += 1
-        }
-        (b, h, sig)
-      }
-    }
-  }
-
   /** One-pass minhash v2: text → (per-band bucket hashes, signature packed
     * as ints — every component is < 2^31 mod the Mersenne prime, so Int
-    * halves the signature table). Two CPU-level changes over [[minhashUdf]]
-    * (same math, bit-identical signatures): permutation-outer loop order so
+    * halves the signature table). Two CPU-level changes over the v1 UDF
+    * (same math, bit-identical signatures; v1 survives as the reference in
+    * MinhashParitySpec): permutation-outer loop order so
     * each component's running min lives in a register instead of 128
     * read-modify-writes per shingle, and the mod-(2^31-1) reduction as two
     * shift-adds (2^31 ≡ 1 mod M) instead of a 64-bit division.
@@ -394,7 +327,7 @@ object Dedup {
     * Scale shape (10^10 docs) — three stages, no pair-sized set shuffle:
     *
     *  1. ONE map pass per doc computes the 128-perm signature and its band
-    *     hashes ([[minhashUdf]]) — no shingle explode, no shuffle before
+    *     hashes ([[minhashSigUdf]]) — no shingle explode, no shuffle before
     *     banding. The signature rides along packed as 128 Ints (512 B).
     *  2. Bucket-local candidate generation + signature prescreen: group by
     *     (band, bucket id), collect the members' (doc_id, signature), and

@@ -135,7 +135,7 @@ object LinkGraph {
     // Loop body: the r5 two-join shape, deliberately. A union-agg
     // restructure (fold the zero-contribution floor rows into the
     // contribution aggregate, one join per iteration) was tried and
-    // MEASURED 2.5x SLOWER at fixture scale (RankAB A/B: 0.5-0.6 s vs
+    // MEASURED 2.5x SLOWER at fixture scale (round-6 A/B: 0.5-0.6 s vs
     // 1.2-1.5 s warm): making each iteration's rank root an
     // exchange+aggregate turns every bcast(rank) build into an AQE
     // shuffle-stage job with 32-reducer writer/codec buffers, where the

@@ -263,7 +263,7 @@ object XPath {
     * of each context node), so the previous per-parent collection churn —
     * a lazy descendants Iterator (Stack + reverseIterator per node), a
     * `toVector` of candidates, and `zipWithIndex.filter.map` per
-    * predicate — was the extraction path's leading allocator (ParseBench:
+    * predicate — was the extraction path's leading allocator (round-6 profile:
     * the xpath family allocated 3.5× the css families per page).
     * Candidates and predicate filtering reuse two scratch buffers; the
     * identity seen-set is only materialized when the context has several

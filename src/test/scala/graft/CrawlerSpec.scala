@@ -175,6 +175,29 @@ class CrawlerSpec extends AnyFunSuite {
     assert(combined.toSeq == full.toSeq)
   }
 
+  test("checkpoint manifests: pages_fetched = Σ partition_lineage = round's pages; misses counted") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-manifest").toString
+    // one seed outside the corpus: round 1 queues it but fetches nothing
+    val withMiss = seeds(d => s"${Fixtures.base(d)}/list/p1.html") :+
+      ("d-missing" -> "http://missing.test/list/p1.html")
+    val out = new Crawler(spark, corpus, Crawler.Config(checkpointDir = Some(tmp)))
+      .crawl(CrawlQueries.listJob, withMiss)
+    val fetchedByRound = out.select("page_no", "seed_id", "url").distinct()
+      .groupBy("page_no").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(fetchedByRound == Map(1 -> 3L, 2 -> 3L, 3 -> 3L))
+    val batchByRound = Map(1 -> 4L, 2 -> 3L, 3 -> 3L)
+    for (round <- 1 to 3) {
+      val json = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(tmp, s"manifest-$round.json")), "UTF-8")
+      def metric(k: String): Long = s""""$k":(\\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
+      val lineage = """"rows":(\d+)""".r.findAllMatchIn(json).map(_.group(1).toLong).sum
+      // list crawl in BFS lockstep: round N fetches every seed's page N
+      assert(metric("pages_fetched") == fetchedByRound(round), s"round $round: $json")
+      assert(lineage == fetchedByRound(round), s"round $round: $json")
+      assert(metric("pages_missing") == batchByRound(round) - fetchedByRound(round), s"round $round: $json")
+    }
+  }
+
   test("url-seen set prevents refetch and terminates self-loops") {
     val out = crawler().crawl(CrawlQueries.listJob, seeds(d => s"${Fixtures.base(d)}/list/p1.html"))
     val urls = out.select("url").distinct().count()

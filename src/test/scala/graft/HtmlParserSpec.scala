@@ -97,6 +97,13 @@ class HtmlParserSpec extends AnyFunSuite {
     assert(root.descendants.exists(e => e.tag == "p" && Text.innerText(e) == "ok"))
   }
 
+  test("close-tag name trims control chars like String.trim: </p\\u0001> closes <p>") {
+    val root = HtmlParser.parse("<div><p>a</p\u0001><span>b</span></div>")
+    val div = root.descendants.find(_.tag == "div").get
+    assert(div.children.collect { case e: HElem => e.tag } == Seq("p", "span"),
+      "a trailing control char must not keep <p> open around the next sibling")
+  }
+
   test("innerText: whitespace collapse + block newlines + table tabs") {
     val root = HtmlParser.parse(
       "<div>  hello \n  world <span>inline</span></div><p>para</p>" +

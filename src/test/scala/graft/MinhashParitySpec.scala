@@ -8,7 +8,8 @@ import graft.pipeline.Dedup
 /** Focused parity pins for the r6 minhash rewrite (Dedup.minhashSigUdf):
   * the ASCII byte-window shingle path, the shift-add Mersenne reduction
   * and the Int-packed signature must be BIT-IDENTICAL to the v1 UDF the
-  * DuckDB-gated operator shipped with — the LSH candidate set (band
+  * DuckDB-gated operator shipped with (kept below as a test-local
+  * reference) — the LSH candidate set (band
   * bucket hashes) and the est-prescreen (signature components) both hang
   * off these values.
   */
@@ -25,6 +26,36 @@ class MinhashParitySpec extends AnyFunSuite {
     org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
       org.apache.spark.unsafe.types.UTF8String.fromString(s),
       org.apache.spark.sql.types.StringType, 42L)
+
+  // v1 signature UDF, kept here as the reference the v2 UDF must match
+  // bit for bit: text → one element per band of (band index, band bucket
+  // hash, full signature), components min((a·h + b) mod M) over the
+  // shingle hashes, each band an FNV-1a fold of its rows' component longs.
+  private def v1Udf(k: Int, numPerm: Int, bands: Int) = {
+    val M = (1L << 31) - 1
+    val rows = numPerm / bands
+    val rng = new java.util.Random(42)
+    val perms = Array.fill(numPerm) {
+      val a = math.max(math.abs(rng.nextLong()) % M, 1L)
+      (a, math.abs(rng.nextLong()) % M)
+    }
+    udf { (text: String) =>
+      val hs = Dedup.shingleHashesPublic(text, k)
+      val sig = Array.fill(numPerm)(Long.MaxValue)
+      for (h0 <- hs; h = ((h0 % M) + M) % M; p <- 0 until numPerm) {
+        val v = (h * perms(p)._1 + perms(p)._2) % M
+        if (v < sig(p)) sig(p) = v
+      }
+      Array.tabulate(bands) { b =>
+        var h = 0xcbf29ce484222325L
+        for (r <- 0 until rows) {
+          var v = sig(b * rows + r)
+          for (_ <- 0 until 8) { h ^= (v & 0xffL); h *= 0x100000001b3L; v >>>= 8 }
+        }
+        (b, h, sig)
+      }
+    }
+  }
 
   val texts = Seq(
     "the quick brown fox jumps over the lazy dog",
@@ -47,7 +78,7 @@ class MinhashParitySpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val v1 = df.select(col("doc_id"), explode(Dedup.minhashUdfPublic(3, 128, 16)(col("text"))).as("e"))
+    val v1 = df.select(col("doc_id"), explode(v1Udf(3, 128, 16)(col("text"))).as("e"))
       .select(col("doc_id"), col("e._1").as("band"), col("e._2").as("bsig"), col("e._3").as("sig"))
       .collect()
       .map(r => ((r.getLong(0), r.getInt(1)), (r.getLong(2), r.getSeq[Long](3))))
