@@ -224,25 +224,39 @@ object Bench {
       .distinct.mkString(java.io.File.pathSeparator)
   }
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-    "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
-    "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
-    "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  /** This JVM's own `--add-opens=` arguments, for a forked child JVM: they
+    * come from `build.sbt`'s `jdk17AddOpens` (forked `run`) or from
+    * spark-submit, so the module list has one source.
+    */
+  private[graft] def parentAddOpens: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      .filter(_.startsWith("--add-opens="))
+  }
+
+  /** Heap for a forked child JVM: `envKey` when set, else half of physical
+    * memory clamped to [2g, 24g]; 24g only when the JVM cannot report
+    * physical memory.
+    */
+  private[graft] def forkXmx(envKey: String): String = sys.env.getOrElse(envKey,
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean =>
+        val halfGb = os.getTotalMemorySize / 2 / (1L << 30)
+        s"${math.max(2L, math.min(24L, halfGb))}g"
+      case _ => "24g"
+    })
 
   /** Fork the suite into a pinned child JVM and relay its artifact line.
     * Child stdout other than the artifact goes to stderr (visible, never
     * corrupts the one-JSON-line contract).
     */
   private def forkAndRelay(): Boolean = {
-    val xmx = sys.env.getOrElse("SPARK_GRAFT_BENCH_XMX", "24g")
+    val xmx = forkXmx("SPARK_GRAFT_BENCH_XMX")
     val gcFlag = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "UseParallelGC")
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val cmd = Seq(javaBin, s"-Xmx$xmx", s"-XX:+$gcFlag",
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++
-      addOpens ++ Seq("-cp", effectiveClasspath(), "graft.Bench")
+      parentAddOpens ++ Seq("-cp", effectiveClasspath(), "graft.Bench")
     try {
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_BENCH_INPROC", "1")

@@ -84,15 +84,7 @@ object ScalingBenchForked {
     val mult = sys.env.getOrElse("SPARK_GRAFT_MULT", "32").toInt
     val javaHome = sys.props("java.home")
     val cp = sys.props("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-      "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
-      "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
-      "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-    val xmx = sys.env.getOrElse("SPARK_GRAFT_XMX", "24g")
+    val xmx = Bench.forkXmx("SPARK_GRAFT_XMX")
     val gc = sys.env.getOrElse("SPARK_GRAFT_GC", "UseParallelGC")
     // SPARK_GRAFT_PRETOUCH=1: fault the whole heap in BEFORE the timed
     // window (-Xms=-Xmx -XX:+AlwaysPreTouch). On a sandbox whose
@@ -110,7 +102,7 @@ object ScalingBenchForked {
     def runOnce(cores: Int): (Long, Double) = {
       val cmd = Seq(s"$javaHome/bin/java", s"-Xmx$xmx", s"-XX:+$gc") ++ preTouch ++ Seq(
         "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++
-        addOpens ++ Seq("-cp", cp, "graft.ScalingWorker", cores.toString, sfDir, mult.toString)
+        Bench.parentAddOpens ++ Seq("-cp", cp, "graft.ScalingWorker", cores.toString, sfDir, mult.toString)
       val pb = new ProcessBuilder(cmd: _*)
       pb.redirectErrorStream(true)
       val proc = pb.start()

@@ -248,15 +248,12 @@ object Fixtures {
   def corpus(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     cache.getOrElseUpdate(sfDir + "@" + spark.hashCode(), {
       import spark.implicits._
-      import org.apache.spark.sql.functions.col
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .selectExpr("doc_id", "text", "lang").as[Doc]
       val n = docs.count()
       val df = docs.flatMap(d =>
         (pagesForDoc(d) :+ hubPage(d, n)) ++ hostSitemapIndex(d, n)).toDF()
-      val par = spark.sparkContext.defaultParallelism
-      val spread =
-        if (df.rdd.getNumPartitions < par) df.repartition(par, col("url")) else df
+      val spread = graft.engine.Layout.spread(df, "url")
       // RDD-level cache (lazyCache), not Dataset.cache: the columnar
       // Dataset cache re-DECODES the html column for all rows on every
       // scan — and the crawl fetch-join scans the whole corpus once per

@@ -47,13 +47,6 @@ final class Crawler(
     */
   @volatile private[graft] var liveShards: Option[SeenSet.Shards] = None
 
-  /** Partitions for a frontier of `rows` driver-known rows: one per
-    * [[Crawler.FrontierRowsPerPartition]], capped at the default parallelism.
-    */
-  private def partitionsFor(rows: Long): Int =
-    math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
-      (rows + FrontierRowsPerPartition - 1) / FrontierRowsPerPartition)).toInt
-
   /** `Rabida.Crawl` (`svc.go:93-101`): paginated crawl over seeds sharing
     * one Job shape. Default seed list = the job's own link
     * (`svcimpl.go:256-259` StartPageUrl override included).
@@ -102,24 +95,13 @@ final class Crawler(
         val link = if (job.startPageUrl.nonEmpty) job.startPageUrl else job.link
         Seq(("seed-0", link))
       }
-    // big seed lists (10^6-seed rounds): toDF on a local Seq converts every
-    // row to Catalyst format ON THE DRIVER (serial, and it rides the plan) —
-    // parallelize instead so conversion and the downstream enrich UDFs
-    // (canonicalize + hash per url) run in tasks. Small lists keep the
-    // LocalRelation (broadcast-friendly, no scheduling overhead).
-    val base =
-      if (effective.size >= 10000)
-        spark.sparkContext
-          .parallelize(effective, spark.sparkContext.defaultParallelism)
-          .toDF("seed_id", "url")
-      // small lists: ONE partition, not leafNodeDefaultParallelism's 32 —
-      // a <10^4-row frontier spread over 32 near-empty partitions makes
-      // every downstream stage (seed checkpoint, broadcast build, newSeen
-      // exchange) pay 32 tasks of fixed overhead for microseconds of row
-      // work (guide §2.2); the enrich UDFs over <10^4 urls are a few ms
-      // single-task
-      else effective.toDF("seed_id", "url").coalesce(1)
-    base
+    // parallelize, not toDF on the local Seq: a 10^6-seed list would convert
+    // every row to Catalyst format ON THE DRIVER; here conversion and the
+    // enrich UDFs (canonicalize + hash per url) run in tasks, laid out by
+    // the driver-known seed count
+    spark.sparkContext
+      .parallelize(effective, Layout.partitions(spark, effective.size))
+      .toDF("seed_id", "url")
       .withColumn("page_no", lit(1))
       .withColumn("cursor", lit(0))
   }
@@ -243,13 +225,12 @@ final class Crawler(
         // the seed count is only known AFTER the checkpoint job (unlike the
         // per-round successor bound), so cap the layout post-hoc: a small
         // seed frame arriving through a many-partition plan (e.g. a parquet
-        // scan-join, which bypasses seedFrame's small-list coalesce) would
-        // otherwise make round 1's broadcast build and anti-joins 32-task
-        // stages of near-empty overhead (guide §2.2). Narrow read of the
-        // cached blocks, no extra job; the dropped partitioning claim is
-        // worthless at these sizes (the batch broadcasts anyway).
-        val seedParts = partitionsFor(n)
-        frontier = if (chk.rdd.getNumPartitions > seedParts) chk.coalesce(seedParts) else chk
+        // scan-join, which bypasses seedFrame's layout) would otherwise make
+        // round 1's broadcast build and anti-joins 32-task stages of
+        // near-empty overhead (guide §2.2). Narrow read of the cached
+        // blocks, no extra job; the dropped partitioning claim is worthless
+        // at these sizes (the batch broadcasts anyway).
+        frontier = Layout.fit(chk, n)
         frontierCount = n
     }
     val seen = new SeenSet(spark, config, prefilterSkipped, s => liveShards = s, resumed.map(_.seen))
@@ -295,15 +276,8 @@ final class Crawler(
           val b = B.lazyCache(
             frontier.orderBy(col("priority"), col("host_bucket"), col("seed_id"), col("url"))
               .limit(n.toInt))
-          // the batch side's row count is DRIVER-KNOWN (= n): pick the
-          // anti-join strategy deliberately (guide §3.1) — broadcast the
-          // small slice instead of letting the planner default to a
-          // sort-merge join (checkpointed/persisted leaves carry no size
-          // stats, so without the hint nothing ever auto-broadcasts and
-          // both sides pay an exchange)
-          val bKeys = b.select("seed_id", "url")
-          val rest = frontier.join(
-            if (n <= BroadcastJoinRows) broadcast(bKeys) else bKeys,
+          // the batch side's row count is DRIVER-KNOWN (= n)
+          val rest = frontier.join(Layout.broadcastIfSmall(b.select("seed_id", "url"), n),
             Seq("seed_id", "url"), "left_anti")
           (b, rest, n)
         case _ => (frontier, spark.emptyDataFrame, frontierCount)
@@ -466,7 +440,7 @@ final class Crawler(
       // downstream stage then pays for (guide §2.2); large frontiers keep
       // full parallelism and the partitioning-preserving wrap
       val remainderCount = frontierCount - batchCount
-      val maxParts = partitionsFor(batchCount + math.max(0L, remainderCount))
+      val maxParts = Layout.partitions(spark, batchCount + math.max(0L, remainderCount))
       // successor dedup + frontier checkpoint + loop-control count, ONE
       // driver job; re-planned if a shard block was lost
       val (chk, n) = seen.recovering(round) {
@@ -477,13 +451,11 @@ final class Crawler(
         // keeping the earlier-queued row (BFS order), so no url is fetched
         // twice
         B.localCheckpointWithCount(
-          if (batchCount < frontierCount) {
-            val rKeys = remainder.select("seed_id", "url_hash")
-            remainder.unionByName(
-              succ.join(
-                if (remainderCount <= BroadcastJoinRows) broadcast(rKeys) else rKeys,
-                Seq("seed_id", "url_hash"), "left_anti"))
-          } else succ,
+          if (batchCount < frontierCount)
+            remainder.unionByName(succ.join(
+              Layout.broadcastIfSmall(remainder.select("seed_id", "url_hash"), remainderCount),
+              Seq("seed_id", "url_hash"), "left_anti"))
+          else succ,
           maxParts)
       }
       frontier = chk
@@ -633,23 +605,6 @@ object Crawler {
     }
     false
   }
-
-  /** Deliberate join strategy from driver-known row counts (guide §3.1):
-    * anti-join sides at or below this many rows are broadcast-hinted
-    * (checkpointed/persisted leaves carry no size stats, so the planner can
-    * never pick broadcast itself and defaults both sides into a sort-merge
-    * exchange). ~50 B/row ⇒ the broadcast is capped near 25 MB; above it
-    * the sort-merge shape is kept (and past `cuckooThreshold` the URL-seen
-    * shards replace the seen join entirely).
-    */
-  private[engine] val BroadcastJoinRows: Long = 500000L
-
-  /** Partition-cap granularity for frontier checkpoints (guide §2.2
-    * "fewer, larger map tasks"): partitions are sized to hold this many
-    * frontier rows, so a 5k-url round checkpoints into ONE partition while
-    * a 10^7-url round keeps every core busy.
-    */
-  private[engine] val FrontierRowsPerPartition: Long = 50000L
 
   final case class Config(
       politeness: Politeness.Config = Politeness.Config(),

@@ -22,7 +22,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *    `skipped` (the crawler's `prefilterSkipped`);
   *  - exact stage, either the anti-join against the `seen` union
   *    (broadcast while the driver-known size is at most
-  *    [[Crawler.BroadcastJoinRows]], sort-merge above), or — past
+  *    [[Layout.BroadcastRows]], sort-merge above), or — past
   *    `Config.cuckooThreshold` — a probe of the executor-resident shards:
   *    cuckoo sketch fast-reject (also counted as skipped), then the exact
   *    [[SeenShard]] as the authority, after ONE exchange by shard.
@@ -131,13 +131,10 @@ private[engine] final class SeenSet(
     val exact = shards match {
       case Some(s) => probe(bloomMaybe, s)
       case None =>
-        // seen's row count is DRIVER-KNOWN: at or below the threshold,
-        // broadcast the seen side so neither side pays an exchange (guide
-        // §3.1 — checkpointed leaves have no stats, so the planner can
-        // never choose this itself; the successor side then stays fused
-        // with the extraction stage). Above it, sort-merge.
-        bloomMaybe.join(if (count <= Crawler.BroadcastJoinRows) broadcast(seen) else seen,
-          Seq("seed_id", "url_hash"), "left_anti")
+        // seen's row count is DRIVER-KNOWN: broadcast a small seen side so
+        // neither side pays an exchange and the successor side stays fused
+        // with the extraction stage; sort-merge above the bound
+        bloomMaybe.join(Layout.broadcastIfSmall(seen, count), Seq("seed_id", "url_hash"), "left_anti")
     }
     bloomNew.fold(exact)(exact.unionByName(_))
   }

@@ -360,16 +360,9 @@ object Dedup {
     // signature pass: ONE row per doc. The tiny single-split documents
     // input is spread across the session's cores first — the signature UDF
     // is the operator's CPU core and must not serialize on the input file
-    // layout (guide §2.5 input-skew note); inputs already as parallel as
-    // the session keep their layout, so a many-split corpus never pays an
-    // extra shuffle. lazyCache (RDD persist, no CacheManager entry) makes
-    // the pass run exactly once for its three consumers.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spreadDocs =
-      if (docs.rdd.getNumPartitions < par)
-        docs.select(col("doc_id"), col("text")).repartition(par, col("doc_id"))
-      else docs.select(col("doc_id"), col("text"))
-    val withSig = spreadDocs
+    // layout. lazyCache (RDD persist, no CacheManager entry) makes the pass
+    // run exactly once for its three consumers.
+    val withSig = graft.engine.Layout.spread(docs.select(col("doc_id"), col("text")), "doc_id")
       .select(col("doc_id"), minhashSigUdf(k, numPerm, bands)(col("text")).as("s"))
       .select(col("doc_id"), col("s._2").as("sig"),
         posexplode(col("s._1")).as(Seq("band", "bsig")))

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Layout
 
 /** Host-level link graph + PageRank — the classic crawl-scale batch job
   * (Page et al. 1999; the reference crawler has no analog, this is the
@@ -59,38 +60,17 @@ object LinkGraph {
     * family, so no dangling-mass redistribution is needed; dangling mass
     * from truncation simply decays (standard simplification).
     */
-  /** `broadcastHostRows`: host dimensions at or below this many rows make
-    * the per-iteration joins broadcast-hash instead of sort-merge (guide
-    * §3.1 — the host count is DRIVER-KNOWN from the `hosts.count()` the
-    * loop needs anyway, while the lazyCache'd leaves carry no stats, so
-    * the planner alone would sort-merge every iteration: measured 2 SMJs
-    * × 2 sort+exchange pairs per iteration on a 50-row dimension). A
-    * rank/contribution row is ~50 B, so the default caps the broadcast
-    * near 50 MB; web-scale host dimensions (10^8) keep the sort-merge
-    * shape.
-    */
-  /** `dimRowsPerPartition`: the cached host/edge dimensions coalesce to
-    * partitions sized by this row count from the DRIVER-KNOWN counts the
-    * loop materializes anyway (guide §2.2 — a 50-row dimension cached
-    * across 32 near-empty partitions turns every per-iteration broadcast
-    * build into a 32-task stage of pure overhead; a 10^8-row dimension
-    * keeps every core).
-    */
-  def pagerank(edges: DataFrame, iters: Int = 5, scale: Long = 1000000000000L,
-               broadcastHostRows: Long = 1000000L,
-               dimRowsPerPartition: Long = 50000L): DataFrame = {
+  def pagerank(edges: DataFrame, iters: Int = 5, scale: Long = 1000000000000L): DataFrame = {
     val B = org.apache.spark.sql.GraftSqlBridge
-    val par = edges.sparkSession.sparkContext.defaultParallelism.toLong
-    def capFor(rows: Long): Int =
-      math.max(1L, math.min(par, (rows + dimRowsPerPartition - 1) / dimRowsPerPartition)).toInt
-    // Persist the edge input and the host dimension ONCE via lazyCache
-    // (RDD-level persist, NOT Dataset.cache): the iteration loop references
-    // both in every contribution plan, and without the persist each of the
-    // `iters` subplans would re-run the upstream edge extraction (a full
-    // crawl in the link_graph pipeline). Dataset.cache would leak strong
-    // CacheManager entries per call AND plan-fragment-match across calls —
-    // the exact failure lazyCache's scaladoc documents; RDD persists are
-    // cleaned by the ContextCleaner when the result goes unreachable.
+    // Persist the edge input, the host dimension and the out-weighted edges
+    // ONCE each via lazyCache (RDD-level persist, NOT Dataset.cache): the
+    // iteration loop references them in every contribution plan, and
+    // without the persist each of the `iters` subplans would re-run the
+    // upstream edge extraction (a full crawl in the link_graph pipeline).
+    // Dataset.cache would leak strong CacheManager entries per call AND
+    // plan-fragment-match across calls — the exact failure lazyCache's
+    // scaladoc documents; RDD persists are cleaned by the ContextCleaner
+    // when the result goes unreachable.
     val e = B.lazyCache(edges)
     // hosts = src ∪ dst: a sink host (in-links, no out-links) still gets a
     // rank row — its inbound mass lands, it just contributes none onward
@@ -107,30 +87,17 @@ object LinkGraph {
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("host", org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.LongType))))
-    // every per-iteration join has a side bounded by h rows (rank,
-    // out-weights, contributions) — broadcast them while h is small
-    def bcast(df: DataFrame): DataFrame =
-      if (h <= broadcastHostRows) broadcast(df) else df
-    // coalesce the cached dimensions to their driver-known row bounds:
-    // h counts hosts exactly, and the h-count job materialized `e` too
-    // (hosts derive from it), so the edge count is one cheap cached-read
-    // job. Only taken in the small-graph (broadcast) regime — at web
-    // scale the extra |E| pass is not free and the dimensions keep their
-    // full parallel layout.
-    val (hosts, ew) =
-      if (h <= broadcastHostRows) {
-        val nE = e.count()
-        val eS = B.lazyCache(e, capFor(nE))
-        (B.lazyCache(hosts0, capFor(h)),
-          B.lazyCache(eS
-            .join(bcast(eS.groupBy("src_host").agg(sum("n_links").as("ow"))), "src_host")
-            .select(col("src_host"), col("dst_host"), col("n_links"), col("ow")),
-            capFor(nE)))
-      } else
-        (hosts0,
-          B.lazyCache(e
-            .join(bcast(e.groupBy("src_host").agg(sum("n_links").as("ow"))), "src_host")
-            .select(col("src_host"), col("dst_host"), col("n_links"), col("ow"))))
+    // the h-count job materialized `e` too (hosts derive from it), so the
+    // edge count is one cheap cached-read job. Both dimensions are then read
+    // through narrow coalesces sized by their driver-known counts, and every
+    // per-iteration join has a side bounded by h rows (rank, out-weights,
+    // contributions), broadcast while h is small.
+    val eS = Layout.fit(e, e.count())
+    val hosts = Layout.fit(hosts0, h)
+    def bcast(df: DataFrame): DataFrame = Layout.broadcastIfSmall(df, h)
+    val ew = B.lazyCache(eS
+      .join(bcast(eS.groupBy("src_host").agg(sum("n_links").as("ow"))), "src_host")
+      .select(col("src_host"), col("dst_host"), col("n_links"), col("ow")))
     val base = (15L * (scale / h)) / 100L
     // Loop body: the r5 two-join shape, deliberately. A union-agg
     // restructure (fold the zero-contribution floor rows into the

@@ -40,8 +40,8 @@ object GraftSqlBridge {
     * changes the partition count, so the claim would be wrong — and a
     * wrong claimed HashPartitioning would let a later same-keyed join
     * skip a required exchange and produce bad rows. Coalesced frontiers
-    * are small by construction, and their joins broadcast (Crawler's
-    * driver-known-size thresholds), so the claim is also worthless there.
+    * are small by construction, and their joins broadcast (graft's
+    * `Layout.broadcastIfSmall`), so the claim is also worthless there.
     * Uncapped checkpoints keep the r3 fromDataset behavior: dropping the
     * claim for LARGE frontiers measured 1.9× slower at 960k-page rounds
     * under local-cluster (every round re-shuffled the seen union).
@@ -81,34 +81,12 @@ object GraftSqlBridge {
     * instead of failing the job (and there is no post-action
     * missing-block scan to race executor registration under multi-JVM).
     */
-  def lazyCache(df: DataFrame): DataFrame = lazyCache(df, Int.MaxValue)
-
-  /** As above, with a partition cap for SMALL cached dimensions (guide
-    * §2.2 "fewer, larger map tasks"): a 50-row host table cached across 32
-    * near-empty partitions makes EVERY downstream consumer — e.g. each
-    * per-iteration broadcast build of a rank loop — a 32-task stage whose
-    * per-task overhead dwarfs its row work. Callers pass a cap derived
-    * from a DRIVER-KNOWN row count (same discipline as
-    * [[localCheckpointWithCount]]), so large dimensions keep full
-    * parallelism. The coalesce is narrow — when the input is itself a
-    * cached DataFrame, the first materialization reads its blocks without
-    * a shuffle. Coalesced wraps drop the origin plan's outputPartitioning
-    * claim automatically (fromDataset derives it from the ORIGIN dataset's
-    * plan whose partitioning the coalesced RDD no longer honors), so the
-    * wrap uses internalCreateDataFrame exactly as the checkpoint path does.
-    */
-  def lazyCache(df: DataFrame, maxParts: Int): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    val rdd0 = df.queryExecution.toRdd.map(_.copy())
-    val coalesced = maxParts > 0 && rdd0.getNumPartitions > maxParts
-    val rdd = if (coalesced) rdd0.coalesce(maxParts) else rdd0
+  def lazyCache(df: DataFrame): DataFrame = {
+    val rdd = df.queryExecution.toRdd.map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (coalesced)
-      spark.internalCreateDataFrame(rdd, ds.schema, isStreaming = false).toDF()
-    else
-      classic.Dataset.ofRows(spark, org.apache.spark.sql.execution.LogicalRDD
-        .fromDataset(rdd, ds, isStreaming = false))
+    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+      org.apache.spark.sql.execution.LogicalRDD
+        .fromDataset(rdd, df.asInstanceOf[classic.Dataset[_]], isStreaming = false))
   }
 
   /** Register a NATIVE Catalyst expression under a SQL-callable name (the

@@ -182,6 +182,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(r2 == r2b)
   }
 
+  test("pagerank persists three RDDs per call: edges, host dimension, out-weighted edges") {
+    val s = spark
+    import s.implicits._
+    val edges = Seq(("A", "B", 2L), ("B", "C", 1L), ("C", "A", 1L), ("A", "C", 1L))
+      .toDF("src_host", "dst_host", "n_links")
+    val before = (spark.sparkContext.getPersistentRDDs.keys ++ Iterator(-1)).max
+    val r = LinkGraph.pagerank(edges, iters = 3)
+    val added = spark.sparkContext.getPersistentRDDs.keys.count(_ > before)
+    assert(added == 3, s"expected 3 persisted RDDs, found $added")
+    assert(r.count() == 3L)
+  }
+
   test("pagerank on an empty edge list: empty rank table, not divide-by-zero") {
     val s = spark
     import s.implicits._
