@@ -48,11 +48,25 @@ object Bench {
     .getOrCreate()
   }
 
-  def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
+  /** Default `local[n]` size: this host's cores, capped at 32. */
+  def defaultCpus: Int = math.min(Runtime.getRuntime.availableProcessors, 32)
+
+  /** Cores for a measurement session: `SPARK_GRAFT_CPUS`, else [[defaultCpus]]. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+
+  /** The timed queries, by [[SparkEntry.queries]] name, in artifact order:
+    * crawls (pages/sec denominator) first, then the pipeline operators.
+    */
+  val crawlQueries: Seq[String] = Seq("crawl_list", "crawl_xpath", "crawl_scroll")
+  val pipelineQueries: Seq[String] = Seq(
+    "dedup_exact", "dedup_minhash_lsh", "ann_topk", "emb_near_dup", "lang_id",
+    "token_count", "q1_agg", "q_events_window",
+    // round 5: Gopher repetition pass (map-only UDF) and the host-graph
+    // PageRank (5 iterations of shuffle-by-dst over extracted edges)
+    "repetition_stats", "pagerank_hosts",
+    // round-5 close: the composed rank-guided crawl (hub crawl + rank +
+    // top-K budget + frontier slice) and the map-only recrawl due-set
+    "crawl_rank_prioritized", "recrawl_due")
 
   /** Cumulative GC time of this JVM (all collectors), for per-rep GC
     * attribution: local-mode executors share the bench JVM, so the delta
@@ -86,14 +100,15 @@ object Bench {
     * post-checkpoint flatten/orderBy executes once per measurement (the
     * r03 verdict flagged the old count-then-distinct double execution).
     */
-  def runCrawls(spark: SparkSession, sfDir: String, reps: Int): Seq[(String, Long, Long, Seq[(Double, Long)])] = {
-    def one(name: String, df: => org.apache.spark.sql.DataFrame): (String, Long, Long, Seq[(Double, Long)]) = {
+  def runCrawls(spark: SparkSession, sfDir: String, reps: Int): Seq[(String, Long, Long, Seq[(Double, Long)])] =
+    crawlQueries.map { name =>
+      val query = SparkEntry.queries(name)
       val runs = (1 to reps).map { _ =>
         timeGc {
           // struct() preserves distinct-row semantics under NULLs —
           // count_distinct(a, b) would silently skip rows where either
           // column is null, understating the pages_per_sec denominator
-          val r = df.agg(count(lit(1)).as("rows"),
+          val r = query(spark, sfDir).agg(count(lit(1)).as("rows"),
             count_distinct(struct(col("doc_id"), col("page_no"))).as("pages")).head()
           (r.getLong(1), r.getLong(0))
         }
@@ -101,35 +116,12 @@ object Bench {
       val (pages, rows) = runs.head._1
       (name, pages, rows, runs.map(r => (r._2, r._3)))
     }
-    Seq(
-      one("crawl_list", CrawlQueries.crawlList(spark, sfDir)),
-      one("crawl_xpath", CrawlQueries.crawlXpath(spark, sfDir)),
-      one("crawl_scroll", CrawlQueries.crawlScroll(spark, sfDir))
-    )
-  }
 
-  def runPipeline(spark: SparkSession, sfDir: String, reps: Int): Seq[(String, Seq[(Double, Long)])] = {
-    def one(name: String, df: => org.apache.spark.sql.DataFrame): (String, Seq[(Double, Long)]) =
-      (name, (1 to reps).map { _ => val r = timeGc(df.count()); (r._2, r._3) })
-    Seq(
-      one("dedup_exact", PipelineQueries.dedupExact(spark, sfDir)),
-      one("dedup_minhash_lsh", PipelineQueries.dedupMinhashLsh(spark, sfDir)),
-      one("ann_topk", PipelineQueries.annTopK(spark, sfDir)),
-      one("emb_near_dup", PipelineQueries.embNearDup(spark, sfDir)),
-      one("lang_id", PipelineQueries.langId(spark, sfDir)),
-      one("token_count", PipelineQueries.tokenCount(spark, sfDir)),
-      one("q1_agg", PipelineQueries.q1Agg(spark, sfDir)),
-      one("q_events_window", PipelineQueries.qEventsWindow(spark, sfDir)),
-      // round 5: Gopher repetition pass (map-only UDF) and the host-graph
-      // PageRank (5 iterations of shuffle-by-dst over extracted edges)
-      one("repetition_stats", PipelineQueries.repetitionStats(spark, sfDir)),
-      one("pagerank_hosts", CrawlQueries.pagerankHosts(spark, sfDir)),
-      // round-5 close: the composed rank-guided crawl (hub crawl + rank +
-      // top-K budget + frontier slice) and the map-only recrawl due-set
-      one("crawl_rank_prioritized", CrawlQueries.crawlRankPrioritized(spark, sfDir)),
-      one("recrawl_due", CrawlQueries.recrawlDue(spark, sfDir))
-    )
-  }
+  def runPipeline(spark: SparkSession, sfDir: String, reps: Int): Seq[(String, Seq[(Double, Long)])] =
+    pipelineQueries.map { name =>
+      val query = SparkEntry.queries(name)
+      (name, (1 to reps).map { _ => val r = timeGc(query(spark, sfDir).count()); (r._2, r._3) })
+    }
 
   private def loadAvg1m(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+")(0).toDouble
@@ -155,7 +147,6 @@ object Bench {
   /** The measured suite, printed as the one JSON artifact line. */
   def runSuite(forked: Boolean): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val (loadEntry, loadStart, waitedSec) = quiesce(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_MAXLOAD", "4.0").toDouble,
@@ -234,11 +225,11 @@ object Bench {
       .filter(_.startsWith("--add-opens="))
   }
 
-  /** Heap for a forked child JVM: `envKey` when set, else half of physical
-    * memory clamped to [2g, 24g]; 24g only when the JVM cannot report
-    * physical memory.
+  /** Heap for a forked child JVM: `SPARK_GRAFT_XMX` when set, else half of
+    * physical memory clamped to [2g, 24g]; 24g only when the JVM cannot
+    * report physical memory.
     */
-  private[graft] def forkXmx(envKey: String): String = sys.env.getOrElse(envKey,
+  private[graft] def forkXmx(): String = sys.env.getOrElse("SPARK_GRAFT_XMX",
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean =>
         val halfGb = os.getTotalMemorySize / 2 / (1L << 30)
@@ -246,39 +237,62 @@ object Bench {
       case _ => "24g"
     })
 
+  /** The child-JVM command for `mainClass`: [[forkXmx]] heap, the
+    * `SPARK_GRAFT_GC` collector (ParallelGC by default), this JVM's
+    * `--add-opens` and [[effectiveClasspath]].
+    *
+    * `SPARK_GRAFT_PRETOUCH=1` faults the whole heap in at JVM startup
+    * (-Xms=-Xmx -XX:+AlwaysPreTouch), before any timed window. On a sandbox
+    * whose first-touch page faults go through a slow host-side memory
+    * backend (measured ~100× a native fault under concurrency, BASELINE.md
+    * round 4), an untouched heap makes the timed reps measure the sandbox,
+    * not the engine. A real cluster sets the same flags on executors for
+    * the same reason (fault/THP cost at first allocation).
+    */
+  def forkCommand(mainClass: String, args: Seq[String]): Seq[String] = {
+    val xmx = forkXmx()
+    val preTouch =
+      if (sys.env.get("SPARK_GRAFT_PRETOUCH").contains("1")) Seq(s"-Xms$xmx", "-XX:+AlwaysPreTouch")
+      else Nil
+    Seq(s"${sys.props("java.home")}/bin/java", s"-Xmx$xmx",
+      s"-XX:+${sys.env.getOrElse("SPARK_GRAFT_GC", "UseParallelGC")}") ++ preTouch ++
+      Seq("-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++
+      parentAddOpens ++ Seq("-cp", effectiveClasspath(), mainClass) ++ args
+  }
+
+  /** Run [[forkCommand]] with `env` added to this process's environment;
+    * the child's stderr is relayed to ours as it arrives (drained
+    * concurrently, so the child never blocks on a full pipe). Returns the
+    * exit code and the child's stdout lines.
+    */
+  def forkJvm(mainClass: String, args: Seq[String], env: Map[String, String] = Map.empty): (Int, Seq[String]) = {
+    val pb = new ProcessBuilder(forkCommand(mainClass, args): _*)
+    env.foreach { case (k, v) => pb.environment().put(k, v) }
+    val proc = pb.start()
+    val errPump = new Thread(() =>
+      scala.io.Source.fromInputStream(proc.getErrorStream).getLines()
+        .foreach(System.err.println), "fork-stderr")
+    errPump.setDaemon(true); errPump.start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    val exit = proc.waitFor()
+    errPump.join()
+    (exit, out)
+  }
+
   /** Fork the suite into a pinned child JVM and relay its artifact line.
     * Child stdout other than the artifact goes to stderr (visible, never
     * corrupts the one-JSON-line contract).
     */
-  private def forkAndRelay(): Boolean = {
-    val xmx = forkXmx("SPARK_GRAFT_BENCH_XMX")
-    val gcFlag = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "UseParallelGC")
-    val javaBin = s"${sys.props("java.home")}/bin/java"
-    val cmd = Seq(javaBin, s"-Xmx$xmx", s"-XX:+$gcFlag",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++
-      parentAddOpens ++ Seq("-cp", effectiveClasspath(), "graft.Bench")
+  private def forkAndRelay(): Boolean =
     try {
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_BENCH_INPROC", "1")
-      pb.redirectErrorStream(false)
-      val proc = pb.start()
-      // drain stderr concurrently so the child never blocks on a full pipe
-      val errPump = new Thread(() =>
-        scala.io.Source.fromInputStream(proc.getErrorStream).getLines()
-          .foreach(System.err.println), "bench-child-stderr")
-      errPump.setDaemon(true); errPump.start()
-      var artifact: Option[String] = None
-      scala.io.Source.fromInputStream(proc.getInputStream).getLines().foreach { l =>
-        if (l.startsWith("""{"metric":""")) artifact = Some(l)
-        else System.err.println(l)
-      }
-      proc.waitFor()
-      artifact match {
-        case Some(line) if proc.exitValue() == 0 => println(line); true
+      val (exit, out) = forkJvm("graft.Bench", Nil, Map("SPARK_GRAFT_BENCH_INPROC" -> "1"))
+      val (artifact, rest) = out.partition(_.startsWith("""{"metric":"""))
+      rest.foreach(System.err.println)
+      artifact.lastOption match {
+        case Some(line) if exit == 0 => println(line); true
         case _ => false
       }
     } catch { case _: Exception => false }
-  }
 
   def main(args: Array[String]): Unit = {
     if (sys.env.contains("SPARK_GRAFT_BENCH_INPROC")) runSuite(forked = true)

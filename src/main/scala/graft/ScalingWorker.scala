@@ -82,32 +82,8 @@ object ScalingBenchForked {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_N", "8").toInt
     val mult = sys.env.getOrElse("SPARK_GRAFT_MULT", "32").toInt
-    val javaHome = sys.props("java.home")
-    val cp = sys.props("java.class.path")
-    val xmx = Bench.forkXmx("SPARK_GRAFT_XMX")
-    val gc = sys.env.getOrElse("SPARK_GRAFT_GC", "UseParallelGC")
-    // SPARK_GRAFT_PRETOUCH=1: fault the whole heap in BEFORE the timed
-    // window (-Xms=-Xmx -XX:+AlwaysPreTouch). On a sandbox whose
-    // first-touch page faults go through a slow host-side memory backend
-    // (measured ~100× a native fault under concurrency, BASELINE.md round
-    // 4), an untouched heap makes the timed reps measure the sandbox, not
-    // the engine; pre-touching moves that cost to JVM startup, outside
-    // the measurement. A real cluster sets the same flags on executors
-    // for the same reason (fault/THP cost at first allocation).
-    val preTouch =
-      if (sys.env.get("SPARK_GRAFT_PRETOUCH").contains("1"))
-        Seq(s"-Xms$xmx", "-XX:+AlwaysPreTouch")
-      else Nil
-
     def runOnce(cores: Int): (Long, Double) = {
-      val cmd = Seq(s"$javaHome/bin/java", s"-Xmx$xmx", s"-XX:+$gc") ++ preTouch ++ Seq(
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++
-        Bench.parentAddOpens ++ Seq("-cp", cp, "graft.ScalingWorker", cores.toString, sfDir, mult.toString)
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-      proc.waitFor()
+      val (_, out) = Bench.forkJvm("graft.ScalingWorker", Seq(cores.toString, sfDir, mult.toString))
       val line = out.find(_.startsWith("SCALING_RESULT"))
         .getOrElse(sys.error(s"worker failed:\n${out.takeRight(30).mkString("\n")}"))
       val pages = """"pages":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong

@@ -239,9 +239,10 @@ object SparkEntry {
     "dedup_exact" ->
       "SELECT min(doc_id) AS keep_id, count(*) AS n FROM documents GROUP BY text ORDER BY 1",
     "dedup_ngram_jaccard" -> ngramJaccardOracle,
-    // LSH banding at 128 perms / 32 bands has recall ≈ 1-5e-8 at J=0.8 and
-    // candidates are re-verified with exact Jaccard — same answer as the
-    // exact operator.
+    // 16×8 LSH banding plus a 0.125 signature-estimate prescreen, then
+    // exact-Jaccard verification: equals the exact pairs on corpora whose
+    // true pairs sit at J ≥ 0.88 (these fixtures); pairs in [0.8, 0.88)
+    // can be missed (Dedup.minhashLshPairs).
     "dedup_minhash_lsh" -> ngramJaccardOracle,
     // connected components over the same pair list via transitive closure
     // (recursive CTE); cluster_id = min reachable doc_id, keep = survivor

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`).
@@ -8,16 +7,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // default to the machine's cores (capped): 30 queries over a 13k-page
-    // fixture corpus at 4 threads would flirt with driver timeouts
-    val defaultCpus = math.min(Runtime.getRuntime.availableProcessors, 32).toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.mkSession(Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.flatMap { case (name, fn) =>

@@ -440,6 +440,7 @@ final class Crawler(
       // downstream stage then pays for (guide §2.2); large frontiers keep
       // full parallelism and the partitioning-preserving wrap
       val remainderCount = frontierCount - batchCount
+      // cap BEFORE the checkpoint: checkpointing uncapped, then Layout.fit, ran crawl_bulk at 479 tasks, not 98
       val maxParts = Layout.partitions(spark, batchCount + math.max(0L, remainderCount))
       // successor dedup + frontier checkpoint + loop-control count, ONE
       // driver job; re-planned if a shard block was lost

@@ -96,9 +96,13 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Character k-shingles of `text`, distinct per doc: (doc_id, shingle). */
+  /** Character k-shingles of `text`, distinct per doc: (doc_id, shingle).
+    * Windows are code points (Spark `substring`/`length`, as DuckDB's
+    * `substr`); a text shorter than k has none — unguarded, Spark's
+    * `sequence(1, 0)` counts down and emits the whole short text twice.
+    */
   def shingles(docs: DataFrame, k: Int = 3): DataFrame =
-    docs.select(col("doc_id"),
+    docs.filter(length(col("text")) >= k).select(col("doc_id"),
         explode(expr(s"transform(sequence(1, length(text)-${k - 1}), i -> substring(text, i, $k))")).as("shingle"))
       .distinct()
 
@@ -185,12 +189,13 @@ object Dedup {
     }
   }
 
-  /** Distinct k-shingle hashes of one text, unsorted. Per-doc local work —
-    * the shingle set never rides a shuffle. ASCII texts (the common case)
-    * hash k-byte windows of the char buffer in place — no substring /
-    * UTF8String allocation per window; the value is bit-identical to
-    * `xxhash64(substring)` because a pure-ASCII window's UTF-8 bytes ARE
-    * its chars (parity pinned in PipelineSpec).
+  /** Distinct k-shingle hashes of one text, unsorted: the xxhash64 of each
+    * [[shingles]] window. Per-doc local work — the shingle set never rides
+    * a shuffle. ASCII texts (the common case) hash k-byte windows of the
+    * char buffer in place — no substring / UTF8String allocation per
+    * window; the value is bit-identical to `xxhash64(substring)` because a
+    * pure-ASCII window's UTF-8 bytes ARE its chars. Other texts window by
+    * code points, so a surrogate pair is one character, as in Spark SQL.
     */
   private def shingleHashes(text: String, k: Int): Array[Long] = {
     val n = text.length - k + 1
@@ -213,8 +218,9 @@ object Dedup {
         i += 1
       }
     } else {
+      val starts = text.codePoints().toArray.scanLeft(0)((at, cp) => at + Character.charCount(cp))
       i = 0
-      while (i < n) { set.add(xx64(text.substring(i, i + k))); i += 1 }
+      while (i + k < starts.length) { set.add(xx64(text.substring(starts(i), starts(i + k)))); i += 1 }
     }
     set.toArray
   }
@@ -440,7 +446,7 @@ object Dedup {
     // primitive copy, no per-element boxing on the survivor probe
     val passes = udf { (sa: Array[Long], sb: Array[Long]) =>
       val (small, big) = if (sa.length <= sb.length) (sa, sb) else (sb, sa)
-      if (small.length < thr * big.length) false
+      if (small.isEmpty || small.length < thr * big.length) false
       else {
         var i = 0; var j = 0; var inter = 0
         while (i < small.length && j < big.length) {

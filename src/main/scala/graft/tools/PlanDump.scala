@@ -1,31 +1,27 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for every bench-measured query to
   * plans/<tag>/<query>_<suffix>.txt — the judge-checkable plan artifacts
   * (guide §1: capture the plan shape before/after each change).
   * Usage: runMain graft.tools.PlanDump <dirTag> <suffix> [query ...]
   */
 object PlanDump {
+  /** The queries dumped: every `graft.Bench` timed query, or only those in `only`. */
+  private[graft] def queries(only: Set[String]): Seq[String] =
+    (graft.Bench.crawlQueries ++ graft.Bench.pipelineQueries).filter(n => only.isEmpty || only(n))
+
   def main(args: Array[String]): Unit = {
     val tag = if (args.length > 0) args(0) else "r06"
     val suffix = if (args.length > 1) args(1) else "before"
     val only = args.drop(2).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Bench.mkSession(cpus)
+    val spark = graft.Bench.mkSession(graft.Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
     graft.corpus.Fixtures.corpus(spark, sfDir)
 
-    val benchQueries = Seq(
-      "crawl_list", "crawl_xpath", "crawl_scroll", "dedup_exact",
-      "dedup_minhash_lsh", "ann_topk", "emb_near_dup", "lang_id",
-      "token_count", "q1_agg", "q_events_window", "repetition_stats",
-      "pagerank_hosts", "crawl_rank_prioritized", "recrawl_due")
     val dir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)
-    for (name <- benchQueries if only.isEmpty || only(name)) {
+    for (name <- queries(only)) {
       try {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
         val plan = df.queryExecution.explainString(
