@@ -215,15 +215,23 @@ object Bench {
       .distinct.mkString(java.io.File.pathSeparator)
   }
 
-  /** This JVM's own `--add-opens=` arguments, for a forked child JVM: they
-    * come from `build.sbt`'s `jdk17AddOpens` (forked `run`) or from
-    * spark-submit, so the module list has one source.
+  /** The flags of this JVM's own arguments that a forked child JVM
+    * inherits, see [[forwardedFlags]].
     */
   private[graft] def parentAddOpens: Seq[String] = {
     import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
-      .filter(_.startsWith("--add-opens="))
+    forwardedFlags(
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq)
   }
+
+  /** The JVM arguments a forked child inherits, in their order: the
+    * `--add-opens=` list, which comes from `build.sbt`'s `jdk17AddOpens`
+    * (forked `run`) or from spark-submit, so the module list has one
+    * source; and `-Dlog4j.configurationFile=`, so a parent that quiets
+    * Spark's log quiets its child too.
+    */
+  private[graft] def forwardedFlags(jvmArgs: Seq[String]): Seq[String] =
+    jvmArgs.filter(a => a.startsWith("--add-opens=") || a.startsWith("-Dlog4j.configurationFile="))
 
   /** Heap for a forked child JVM: `SPARK_GRAFT_XMX` when set, else half of
     * physical memory clamped to [2g, 24g]; 24g only when the JVM cannot
@@ -239,7 +247,7 @@ object Bench {
 
   /** The child-JVM command for `mainClass`: [[forkXmx]] heap, the
     * `SPARK_GRAFT_GC` collector (ParallelGC by default), this JVM's
-    * `--add-opens` and [[effectiveClasspath]].
+    * `--add-opens` and log4j configuration and [[effectiveClasspath]].
     *
     * `SPARK_GRAFT_PRETOUCH=1` faults the whole heap in at JVM startup
     * (-Xms=-Xmx -XX:+AlwaysPreTouch), before any timed window. On a sandbox

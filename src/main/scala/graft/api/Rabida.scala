@@ -76,29 +76,22 @@ object RabiConfig {
   */
 final class Rabida(spark: SparkSession, corpus: DataFrame, conf: RabiConfig = RabiConfig()) {
 
-  private def crawler(c: RabiConfig, debugDelayZero: Boolean = false): Crawler = {
-    val pol = if (debugDelayZero) Politeness.Config() else c.politeness
-    new Crawler(spark, corpus, Crawler.Config(politeness = pol,
-      checkpointDir = None, timeBudgetMs = c.timeoutMs))
-  }
+  private def crawler(c: RabiConfig): Crawler =
+    new Crawler(spark, corpus, Crawler.Config(politeness = c.politeness, timeBudgetMs = c.timeoutMs))
 
   /** `Crawl` (`svc.go:93-101`). */
   def crawl(job: Job)(callback: (Seq[Row], String, Int) => Boolean): Unit =
     crawlWithConfig(job, conf)(callback)
 
   /** `CrawlWithConfig` (`svc.go:103-113`). */
-  def crawlWithConfig(job: Job, c: RabiConfig)(callback: (Seq[Row], String, Int) => Boolean): Unit = {
-    val cr = crawler(c)
-    cr.run(job, seedsOf(job), scroll = false, mode = JsProperty, callback = Some {
-      (round: Int, pages: DataFrame) =>
-        emit(pages, callback, round, cursorMode = false)
+  def crawlWithConfig(job: Job, c: RabiConfig)(callback: (Seq[Row], String, Int) => Boolean): Unit =
+    crawler(c).crawl(job, callback = Some {
+      (round: Int, pages: DataFrame) => emit(pages, callback, round)
     }).count()
-  }
 
   /** `CrawlScroll` (`svc.go:136-144`): callback(ret, cursor, pageNo). */
-  def crawlScroll(job: Job)(callback: (Seq[Row], Int, Int) => Boolean): Unit = {
-    val cr = crawler(conf)
-    cr.run(job, seedsOf(job), scroll = true, mode = JsProperty, callback = Some {
+  def crawlScroll(job: Job)(callback: (Seq[Row], Int, Int) => Boolean): Unit =
+    crawler(conf).crawlScroll(job, callback = Some {
       (round: Int, pages: DataFrame) =>
         val rows = collectItems(pages)
         val cursor = pages.select(org.apache.spark.sql.functions.max(
@@ -109,15 +102,12 @@ final class Rabida(spark: SparkSession, corpus: DataFrame, conf: RabiConfig = Ra
         }
         callback(rows, cursor, round)
     }).count()
-  }
 
   /** `CrawlScrollSmooth` (`svc.go:171-179`): callback(ret, pageNo). */
-  def crawlScrollSmooth(job: Job)(callback: (Seq[Row], Int) => Boolean): Unit = {
-    val cr = crawler(conf)
-    cr.run(job, seedsOf(job), scroll = false, mode = DomAttribute, callback = Some {
+  def crawlScrollSmooth(job: Job)(callback: (Seq[Row], Int) => Boolean): Unit =
+    crawler(conf).crawlScrollSmooth(job, callback = Some {
       (round: Int, pages: DataFrame) => callback(collectItems(pages), round)
     }).count()
-  }
 
   /** `DownloadFile` (`svc.go:128-134`): fetch the job's link, write its
     * payload to `conf.out`, invoke callback with the file path.
@@ -130,14 +120,6 @@ final class Rabida(spark: SparkSession, corpus: DataFrame, conf: RabiConfig = Ra
       graft.urls.Urls.urlHash(graft.urls.Urls.canonicalize(url)))
     new java.io.File(conf.out).listFiles().find(_.getName.startsWith(name))
       .foreach(f => callback(f.getPath))
-  }
-
-  private def seedsOf(job: Job): DataFrame = {
-    import spark.implicits._
-    val link = if (job.startPageUrl.nonEmpty) job.startPageUrl else job.link
-    Seq(("seed-0", link)).toDF("seed_id", "url")
-      .withColumn("page_no", org.apache.spark.sql.functions.lit(1))
-      .withColumn("cursor", org.apache.spark.sql.functions.lit(0))
   }
 
   /** NOTE (scale): the callback API is inherently driver-side — the
@@ -155,7 +137,7 @@ final class Rabida(spark: SparkSession, corpus: DataFrame, conf: RabiConfig = Ra
   }
 
   private def emit(pages: DataFrame, callback: (Seq[Row], String, Int) => Boolean,
-                   pageNo: Int, cursorMode: Boolean): Boolean = {
+                   pageNo: Int): Boolean = {
     import org.apache.spark.sql.functions.{col, length}
     val rows = collectItems(pages)
     val nextUrl = pages.select(col("next_page_url"))

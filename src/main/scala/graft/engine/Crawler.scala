@@ -34,6 +34,9 @@ final class Crawler(
 
   private val corpusPages = corpus.select(col("url"), col("html"))
 
+  /** The default fetch (`Config.fetcher` = None): the corpus scan-join. */
+  private val corpusFetch = new CorpusJoinFetcher(corpus, config.broadcastFrontier)
+
   /** Successor rows the sketch prefilter proved new (skipped the exact
     * anti-join shuffle) — observable pruning metric for tests/telemetry.
     */
@@ -49,10 +52,12 @@ final class Crawler(
 
   /** `Rabida.Crawl` (`svc.go:93-101`): paginated crawl over seeds sharing
     * one Job shape. Default seed list = the job's own link
-    * (`svcimpl.go:256-259` StartPageUrl override included).
+    * (`svcimpl.go:256-259` StartPageUrl override included). `callback` as
+    * in [[run]].
     */
-  def crawl(job: Job, seeds: Seq[(String, String)] = Nil): DataFrame =
-    run(job, seedFrame(job, seeds), scroll = false, mode = JsProperty)
+  def crawl(job: Job, seeds: Seq[(String, String)] = Nil,
+            callback: Option[RoundCallback] = None): DataFrame =
+    run(job, seedFrame(job, seeds), scroll = false, mode = JsProperty, callback)
 
   /** Priority-frontier entry: seeds arrive as a DataFrame carrying an
     * explicit `priority` column (lower crawls first) — the north-star
@@ -67,26 +72,26 @@ final class Crawler(
       // null-safe: the batch slice orders priority ascending (NULLS FIRST
       // in Spark), so a null priority — e.g. an un-coalesced left join —
       // would silently crawl BEFORE priority 0; send it to the back instead
-      seeds.select(col("seed_id"), col("url"),
-          coalesce(col("priority").cast("int"), lit(Int.MaxValue)).as("priority"))
-        .withColumn("page_no", lit(1))
-        .withColumn("cursor", lit(0)),
+      seedRows(seeds.select(col("seed_id"), col("url"),
+        coalesce(col("priority").cast("int"), lit(Int.MaxValue)).as("priority"))),
       scroll = false, mode = JsProperty)
 
   /** `Rabida.CrawlScroll` (`svc.go:136-144`): load-more crawl with cursor
     * dedup — only items past the cursor are extracted each round
     * (`svcimpl_scroll.go:363-376`).
     */
-  def crawlScroll(job: Job, seeds: Seq[(String, String)] = Nil): DataFrame =
-    run(job, seedFrame(job, seeds), scroll = true, mode = JsProperty)
+  def crawlScroll(job: Job, seeds: Seq[(String, String)] = Nil,
+                  callback: Option[RoundCallback] = None): DataFrame =
+    run(job, seedFrame(job, seeds), scroll = true, mode = JsProperty, callback)
 
   /** `Rabida.CrawlScrollSmooth` (`svc.go:171-179`): viewport-scroll crawl,
     * full re-extraction each round (no cursor; caller dedups,
     * `svcimpl_scroll_smooth.go:284-287`), DOM-attribute (not JS-property)
     * reads for generic attrs (C3, `svcimpl_scroll_smooth.go:486-492`).
     */
-  def crawlScrollSmooth(job: Job, seeds: Seq[(String, String)] = Nil): DataFrame =
-    run(job, seedFrame(job, seeds), scroll = false, mode = DomAttribute)
+  def crawlScrollSmooth(job: Job, seeds: Seq[(String, String)] = Nil,
+                        callback: Option[RoundCallback] = None): DataFrame =
+    run(job, seedFrame(job, seeds), scroll = false, mode = DomAttribute, callback)
 
   private def seedFrame(job: Job, seeds: Seq[(String, String)]): DataFrame = {
     val effective =
@@ -99,12 +104,14 @@ final class Crawler(
     // every row to Catalyst format ON THE DRIVER; here conversion and the
     // enrich UDFs (canonicalize + hash per url) run in tasks, laid out by
     // the driver-known seed count
-    spark.sparkContext
+    seedRows(spark.sparkContext
       .parallelize(effective, Layout.partitions(spark, effective.size))
-      .toDF("seed_id", "url")
-      .withColumn("page_no", lit(1))
-      .withColumn("cursor", lit(0))
+      .toDF("seed_id", "url"))
   }
+
+  /** A seed frame as round-one frontier rows: page 1, cursor 0. */
+  private def seedRows(seeds: DataFrame): DataFrame =
+    seeds.withColumn("page_no", lit(1)).withColumn("cursor", lit(0))
 
   private val canonicalHash = udf((u: String) => Urls.urlHash(Urls.canonicalize(u)))
   private val hostOf = udf((u: String) => Urls.host(u))
@@ -150,9 +157,6 @@ final class Crawler(
     withBtn
   }
 
-  def run(job: Job, seeds0: DataFrame, scroll: Boolean, mode: AttrMode): DataFrame =
-    run(job, seeds0, scroll, mode, None)
-
   /** Full loop with an optional per-round callback — the reference's
     * `callback(ret, nextPageUrl, currentPageNo) bool` abort surface
     * (`svc.go:93-101`): invoked after each round with that round's page
@@ -160,7 +164,7 @@ final class Crawler(
     * job, rounds ≡ pages, so the cadence matches the reference exactly.
     */
   def run(job: Job, seeds0: DataFrame, scroll: Boolean, mode: AttrMode,
-          callback: Option[(Int, DataFrame) => Boolean]): DataFrame = {
+          callback: Option[RoundCallback] = None): DataFrame = {
     val store = config.checkpointDir.map(d =>
       new FrontierStore(d, config.seenCompactEvery)(spark))
     val resumed = store.flatMap(_.loadLatest())
@@ -252,104 +256,57 @@ final class Crawler(
     val uas = UserAgents.pool
     val uaCol = element_at(typedLit(uas), (pmod(col("url_hash"), lit(uas.length)) + 1).cast("int"))
 
-    try {
-    while (round < config.maxRounds && frontierCount > 0 && !aborted) {
-      round += 1
-      committer.foreach(_.poll())
-      // priority frontier: when a batch limit is set, take the highest-
-      // priority slice ordered by (priority, host_bucket) — the north-star
-      // frontier discipline; default is the full lockstep BFS round
-      val (batch, remainder, batchCount) = config.batchLimit match {
-        case Some(n) if frontierCount > n =>
-          // lazy boundary, not an eager checkpoint (same r4 serial-floor
-          // lever as extraction): the fetch join's broadcast build is the
-          // round's first consumer and fills the persisted RDD; the
-          // remainder anti-join and the seen union then read the blocks.
-          // The priority-frontier regime thus pays ONE driver job per
-          // round too, not two. (seed_id, url) complete a TOTAL order —
-          // the lazy boundary keeps lineage, so a lost block recomputes
-          // the slice, and orderBy+limit with ties would be free to
-          // return a DIFFERENT row set than the one already unioned into
-          // `seen` and fetched (urls silently marked seen but never
-          // crawled). With the tiebreaker, recompute reproduces the
-          // identical batch.
-          val b = B.lazyCache(
-            frontier.orderBy(col("priority"), col("host_bucket"), col("seed_id"), col("url"))
-              .limit(n.toInt))
-          // the batch side's row count is DRIVER-KNOWN (= n)
-          val rest = frontier.join(Layout.broadcastIfSmall(b.select("seed_id", "url"), n),
-            Seq("seed_id", "url"), "left_anti")
-          (b, rest, n)
-        case _ => (frontier, spark.emptyDataFrame, frontierCount)
-      }
+    // robots Crawl-delay rides in per host via the dimension join (left:
+    // hosts without a declared delay schedule on the engine's own knobs)
+    def withRobotsDelay(df: DataFrame): DataFrame =
+      if (robotsHasDelay)
+        df.join(
+          robotsDim.select(col("__r_host").as("host"),
+            when(col("__r_delay_ms") > 0, col("__r_delay_ms")).as("__robots_delay_ms")),
+          Seq("host"), "left")
+      else df
 
-      // fetch = scan-join; broadcast the (small) frontier batch so the big
-      // corpus never shuffles (SURVEY.md S1). At 10^10-frontier scale the
-      // broadcast's DRIVER-SIDE hash build becomes the serial floor (it
-      // grows with round size), so broadcastFrontier=false switches to a
-      // shuffle-HASH join: with the corpus pre-partitioned by url (bucketed
-      // table at real scale) the corpus never re-shuffles and the hash
-      // build runs per-partition on the executors — fully parallel. AQE
-      // splits skewed hosts either way.
-      // robots Crawl-delay rides in per host via the dimension join (left:
-      // hosts without a declared delay schedule on the engine's own knobs)
-      def withRobotsDelay(df: DataFrame): DataFrame =
-        if (robotsHasDelay)
-          df.join(
-            robotsDim.select(col("__r_host").as("host"),
-              when(col("__r_delay_ms") > 0, col("__r_delay_ms")).as("__robots_delay_ms")),
-            Seq("host"), "left")
-        else df
+    // realPace: honor the schedule in wall-clock (a live fetcher's
+    // behavior); off by default — the sandbox corpus join needs no delay
+    // emitted_ms carries the wall-clock emission offset (and keeps the
+    // pacing udf alive through column pruning); 0 when pacing is virtual.
+    // Layouts differ by pacing mode: VIRTUAL pacing repartitions by url
+    // hash so a hot (Zipf) host's parse work spreads evenly (SURVEY.md
+    // §7 hard part 5); WALL-CLOCK pacing must do the opposite — url-hash
+    // spread would make every task sleep toward the hot host's late
+    // schedule — so hosts are bin-packed by delay budget and each bin
+    // runs its schedule in order, waits overlapped with tail-host work
+    // (§7 hard part 6; see Politeness.packForPace).
+    def schedulePace(df: DataFrame): DataFrame = {
+      val sched = Politeness.schedule(withRobotsDelay(df), config.politeness,
+        if (robotsHasDelay) Some(col("__robots_delay_ms")) else None)
+      if (config.realPace && politenessActive)
+        Politeness.pace(
+          Politeness.packForPace(sched, spark.sparkContext.defaultParallelism),
+          config.paceClock())
+      else if (politenessActive)
+        sched.repartition(col("url_hash")).withColumn("emitted_ms", lit(0L))
+      else sched.withColumn("emitted_ms", lit(0L))
+    }
 
-      // politeness windows by host; without rebalancing, extraction would
-      // inherit that partitioning and a hot (Zipf) host would serialize all
-      // its parsing in one task — repartition by url hash so parse work
-      // spreads evenly (SURVEY.md §7 hard part 5: salting the skew out of
-      // the post-schedule stage; schedule columns are already computed).
-      // realPace: honor the schedule in wall-clock (a live fetcher's
-      // behavior); off by default — the sandbox corpus join needs no delay
-      // emitted_ms carries the wall-clock emission offset (and keeps the
-      // pacing udf alive through column pruning); 0 when pacing is virtual.
-      // Layouts differ by pacing mode: VIRTUAL pacing repartitions by url
-      // hash so a hot (Zipf) host's parse work spreads evenly (SURVEY.md
-      // §7 hard part 5); WALL-CLOCK pacing must do the opposite — url-hash
-      // spread would make every task sleep toward the hot host's late
-      // schedule — so hosts are bin-packed by delay budget and each bin
-      // runs its schedule in order, waits overlapped with tail-host work
-      // (§7 hard part 6; see Politeness.packForPace).
-      def schedulePace(df: DataFrame): DataFrame = {
-        val sched = Politeness.schedule(withRobotsDelay(df), config.politeness,
-          if (robotsHasDelay) Some(col("__robots_delay_ms")) else None)
-        if (config.realPace && politenessActive)
-          Politeness.pace(
-            Politeness.packForPace(sched, spark.sparkContext.defaultParallelism),
-            config.paceClock())
-        else if (politenessActive)
-          sched.repartition(col("url_hash")).withColumn("emitted_ms", lit(0L))
-        else sched.withColumn("emitted_ms", lit(0L))
+    // a batch's page rows: fetch + politeness schedule, the UA and cookie
+    // columns, the iframe join, one extraction per page behind a lazy
+    // boundary, then PageColumns plus the extraction's fields. The loop
+    // calls it once per round; a crawl that ran no round returns it over a
+    // zero-row batch, which plans to an empty relation and submits no job.
+    def pagesOf(batch: DataFrame): DataFrame = {
+      val fetched = config.fetcher match {
+        // default (PlanSpec-pinned): the corpus join runs BEFORE the
+        // schedule, so a url absent from the corpus (404/timeout lineage)
+        // consumes no politeness slot
+        case None => schedulePace(corpusFetch.fetch(batch))
+        // pluggable fetcher (SURVEY.md S1 "real scale" path): politeness
+        // must gate the fetch itself — schedule + (wall-clock) pace the
+        // frontier batch, THEN fetch, so a live fetcher issues each
+        // request at its scheduled slot.
+        case Some(f) => f.fetch(schedulePace(batch))
       }
-
-      val fetchedPaced = config.fetcher match {
-        case None =>
-          // default fused shape (PlanSpec-pinned): fetch = corpus scan-join
-          // FIRST (broadcast the small frontier batch so the big corpus
-          // never shuffles, SURVEY.md S1; at 10^10-frontier scale
-          // broadcastFrontier=false switches to a shuffle-HASH join whose
-          // hash build runs per-partition on the executors, the corpus
-          // pre-bucketed by url). A url absent from the corpus
-          // (404/timeout lineage) consumes no politeness slot. AQE splits
-          // skewed hosts either way.
-          val joinBatch =
-            if (config.broadcastFrontier) broadcast(batch) else batch.hint("shuffle_hash")
-          schedulePace(joinBatch.join(corpusPages, Seq("url"), "inner"))
-        case Some(f) =>
-          // pluggable fetcher (SURVEY.md S1 "real scale" path): politeness
-          // must gate the fetch itself — schedule + (wall-clock) pace the
-          // frontier batch, THEN fetch, so a live fetcher issues each
-          // request at its scheduled slot.
-          f.fetch(schedulePace(batch))
-      }
-      val paced = fetchedPaced
+      val paced = fetched
         .withColumn("ua", uaCol)
         .withColumn("cookies", lit(job.enableCookies.rawCookies)) // S4 fetch metadata
         // parsed jar (lib/cookies.go parity): typed struct column, computed
@@ -391,26 +348,51 @@ final class Crawler(
       // guarantees exactly ONE extraction (one HTML parse) per page —
       // projecting fields first would let CollapseProject clone the
       // expression per field. LAZY boundary, not an eager checkpoint (r4
-      // serial-floor lever): the round's frontier checkpoint job below
-      // reads the successor plan THROUGH this persisted RDD and fills it
-      // in the same pass, so extraction + successor-gen + loop-control
+      // serial-floor lever): the round's frontier checkpoint job in the
+      // loop reads the successor plan THROUGH this persisted RDD and fills
+      // it in the same pass, so extraction + successor-gen + loop-control
       // count cost ONE driver job per round instead of two (BASELINE.md
       // round 2 measured one job fewer per round lifting 1v4 scaling
       // 0.59→0.64). B.lazyCache (not Dataset.persist — see its scaladoc
       // for the CacheManager-leak and lineage rationale) is as strong a
       // projection barrier as the checkpoint was.
-      val materialized = B.lazyCache(withFrame
-        .select(col("seed_id"), col("url"), col("url_hash"), col("host"), col("host_bucket"),
-          col("priority"), col("page_no"), col("cursor"), col("scheduled_ms"), col("fetch_seq"),
-          col("emitted_ms"), col("ua"), col("cookies"), col("cookie_jar"), x.as("x")))
-      val pages = materialized
-        .select(col("seed_id"), col("url"), col("url_hash"), col("host"), col("host_bucket"),
-          col("priority"), col("page_no"), col("cursor"), col("scheduled_ms"), col("fetch_seq"),
-          col("emitted_ms"), col("ua"), col("cookies"), col("cookie_jar"),
-          col("x.items").as("items"), col("x.next_page_url").as("next_page_url"),
-          col("x.n_scope").as("n_scope"), col("x.paginate_goon").as("paginate_goon"),
-          col("x.error").as("error"))
+      val pageCols = PageColumns.map(col)
+      B.lazyCache(withFrame.select(pageCols :+ x.as("x"): _*))
+        .select(pageCols :+ col("x.*"): _*)
+    }
 
+    try {
+    while (round < config.maxRounds && frontierCount > 0 && !aborted) {
+      round += 1
+      committer.foreach(_.poll())
+      // priority frontier: when a batch limit is set, take the highest-
+      // priority slice ordered by (priority, host_bucket) — the north-star
+      // frontier discipline; default is the full lockstep BFS round
+      val (batch, remainder, batchCount) = config.batchLimit match {
+        case Some(n) if frontierCount > n =>
+          // lazy boundary, not an eager checkpoint (same r4 serial-floor
+          // lever as extraction): the fetch join's broadcast build is the
+          // round's first consumer and fills the persisted RDD; the
+          // remainder anti-join and the seen union then read the blocks.
+          // The priority-frontier regime thus pays ONE driver job per
+          // round too, not two. (seed_id, url) complete a TOTAL order —
+          // the lazy boundary keeps lineage, so a lost block recomputes
+          // the slice, and orderBy+limit with ties would be free to
+          // return a DIFFERENT row set than the one already unioned into
+          // `seen` and fetched (urls silently marked seen but never
+          // crawled). With the tiebreaker, recompute reproduces the
+          // identical batch.
+          val b = B.lazyCache(
+            frontier.orderBy(col("priority"), col("host_bucket"), col("seed_id"), col("url"))
+              .limit(n.toInt))
+          // the batch side's row count is DRIVER-KNOWN (= n)
+          val rest = frontier.join(Layout.broadcastIfSmall(b.select("seed_id", "url"), n),
+            Seq("seed_id", "url"), "left_anti")
+          (b, rest, n)
+        case _ => (frontier, spark.emptyDataFrame, frontierCount)
+      }
+
+      val pages = pagesOf(batch)
       perRound += pages
 
       // L10 abort via callback (`svcimpl.go:402-404,487-489`)
@@ -478,7 +460,9 @@ final class Crawler(
         throw t
     } finally spark.sparkContext.setLocalProperty(markAllKey, prevMarkAll)
 
-    val all = perRound.reduceOption(_ unionByName _).getOrElse(emptyPages(job))
+    // no round ran (robots-blocked seeds, a finished crawl resumed,
+    // maxRounds reached): a zero-row batch gives the same page schema
+    val all = perRound.reduceOption(_ unionByName _).getOrElse(pagesOf(frontier.limit(0)))
     // item explosion: pos continues across scroll rounds via the cursor
     // (C1: `posexplode` + cursor offset ≡ the reference's nth-child rewrite)
     all.select(col("seed_id"), col("url"), col("page_no"), col("cursor"),
@@ -487,26 +471,6 @@ final class Crawler(
         posexplode_outer(col("items")).as(Seq("local_pos", "item")))
       .withColumn("pos", col("cursor") + col("local_pos"))
       .drop("local_pos")
-  }
-
-  private def emptyPages(job: Job): DataFrame = {
-    import org.apache.spark.sql.types._
-    val itemType = SchemaCompiler.itemType(job.cssSelector)
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("seed_id", StringType), StructField("url", StringType),
-        StructField("url_hash", LongType), StructField("host", StringType),
-        StructField("host_bucket", IntegerType), StructField("priority", IntegerType),
-        StructField("page_no", IntegerType), StructField("cursor", IntegerType),
-        StructField("scheduled_ms", LongType), StructField("fetch_seq", LongType),
-        StructField("emitted_ms", LongType),
-        StructField("ua", StringType), StructField("cookies", StringType),
-        StructField("cookie_jar", ArrayType(StructType(Seq(
-          StructField("name", StringType), StructField("value", StringType),
-          StructField("domain", StringType), StructField("expiresHours", IntegerType))))),
-        StructField("items", ArrayType(itemType)), StructField("next_page_url", StringType),
-        StructField("n_scope", IntegerType), StructField("paginate_goon", BooleanType),
-        StructField("error", StringType))))
   }
 
   /** Host-keyed robots dimension, parsed ON THE EXECUTORS — no corpus
@@ -525,12 +489,13 @@ final class Crawler(
     * memory cliff.
     */
   private lazy val robotsDim: DataFrame = {
-    val ua = config.robotsUserAgent
+    // the `*` group: the crawl rotates browser UAs (UserAgents.pool), so
+    // no product token of its own selects a named group
     val parse = udf { (url: String, html: Array[Byte]) =>
       val body =
         if (html == null) ""
         else new String(html, java.nio.charset.StandardCharsets.UTF_8)
-      val r = Robots.parseFor(body, ua)
+      val r = Robots.parse(body)
       (Urls.host(url), r.allows, r.disallows, r.crawlDelayMs.getOrElse(-1L))
     }
     corpus.filter(col("url").endsWith("/robots.txt"))
@@ -576,6 +541,19 @@ object UserAgents {
 
 object Crawler {
 
+  /** Per-round callback of [[Crawler.run]]: (round, that round's pages) →
+    * abort?
+    */
+  type RoundCallback = (Int, DataFrame) => Boolean
+
+  /** A round's frontier and fetch columns, in page-row order; the page row
+    * is these plus the extraction's fields (items, next_page_url, n_scope,
+    * paginate_goon, error).
+    */
+  private val PageColumns = Seq("seed_id", "url", "url_hash", "host", "host_bucket",
+    "priority", "page_no", "cursor", "scheduled_ms", "fetch_seq", "emitted_ms",
+    "ua", "cookies", "cookie_jar")
+
   /** Block loss that in-process recovery cannot repair (the rebuild
     * source itself lost blocks). The durable-store commits are drained
     * before this surfaces, so when a checkpointDir is configured the
@@ -617,9 +595,6 @@ object Crawler {
       // where the frontier never fits one round.
       batchLimit: Option[Long] = None,
       respectRobots: Boolean = false,
-      // product token for robots.txt group selection (RFC 9309 §2.2.1);
-      // "*" = generic rules only, matching the rotating per-url UA pool
-      robotsUserAgent: String = "*",
       // sleep tasks to the politeness schedule in wall-clock time (live
       // fetcher behavior); tests/bench leave the schedule virtual
       realPace: Boolean = false,

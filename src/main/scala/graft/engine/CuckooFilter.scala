@@ -35,7 +35,6 @@ final class CuckooFilter private (
   private var stash: List[(Int, Int)] = Nil
 
   def size: Long = count
-  def stashSize: Int = stash.length
 
   private def altBucket(b: Int, fp: Int): Int =
     // partial-key: b XOR hash(fp); multiply-shift over the fingerprint

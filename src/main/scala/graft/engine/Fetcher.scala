@@ -19,29 +19,34 @@ import org.apache.spark.sql.functions._
   *     join's 404/timeout lineage — the frontier store records
   *     `pages_missing` from the batch/fetched delta).
   *
-  * When `Crawler.Config.fetcher` is None the crawler keeps its default
-  * fused corpus scan-join (fetch BEFORE schedule, so urls absent from the
-  * corpus never consume politeness slots — the plan shape pinned by
-  * PlanSpec). [[CorpusJoinFetcher]] exposes that same join through this
-  * trait for deployments that want the trait path end-to-end; a live
-  * deployment supplies an HTTP implementation (e.g. a `mapPartitions`
-  * connection-pool fetcher) without touching the loop.
+  * When `Crawler.Config.fetcher` is None the crawler fetches through
+  * [[CorpusJoinFetcher]]`(corpus, Config.broadcastFrontier)`, called
+  * BEFORE the schedule on the unscheduled batch, so urls absent from the
+  * corpus never consume politeness slots (the plan shape pinned by
+  * PlanSpec). Passing a `CorpusJoinFetcher` as `Config.fetcher` runs the
+  * same join behind the schedule; a live deployment supplies an HTTP
+  * implementation (e.g. a `mapPartitions` connection-pool fetcher)
+  * without touching the loop.
   */
 trait Fetcher extends Serializable {
   def fetch(pacedBatch: DataFrame): DataFrame
 }
 
 /** The sandbox/default fetch as a [[Fetcher]]: scan-join against a static
-  * Common-Crawl-style corpus on url. `broadcastBatch` mirrors
-  * `Crawler.Config.broadcastFrontier`: broadcast the (small) batch so the
-  * corpus never shuffles; at 10^10-frontier scale switch it off for a
-  * shuffle-hash join against a url-bucketed corpus.
+  * Common-Crawl-style corpus on url (SURVEY.md S1). `broadcastBatch`
+  * mirrors `Crawler.Config.broadcastFrontier`: broadcast the (small) batch
+  * so the big corpus never shuffles. At 10^10-frontier scale the
+  * broadcast's DRIVER-SIDE hash build becomes the serial floor (it grows
+  * with round size), so switching it off gives a shuffle-HASH join: with
+  * the corpus pre-partitioned by url (bucketed table at real scale) the
+  * corpus never re-shuffles and the hash build runs per-partition on the
+  * executors. AQE splits skewed hosts either way.
   */
 final class CorpusJoinFetcher(corpus: DataFrame, broadcastBatch: Boolean = true)
     extends Fetcher {
   private val pages = corpus.select(col("url"), col("html"))
-  override def fetch(pacedBatch: DataFrame): DataFrame = {
-    val b = if (broadcastBatch) broadcast(pacedBatch) else pacedBatch.hint("shuffle_hash")
+  override def fetch(batch: DataFrame): DataFrame = {
+    val b = if (broadcastBatch) broadcast(batch) else batch.hint("shuffle_hash")
     b.join(pages, Seq("url"), "inner")
   }
 }

@@ -87,6 +87,9 @@ object Politeness {
     val spark = df.sparkSession
     val budgets = df.groupBy("host").agg(max("scheduled_ms").as("__budget"))
     val heavy = budgets.orderBy(col("__budget").desc, col("host")).limit(4 * bins).collect()
+    // no host, no row (the zero-row batch of a crawl that ran no round):
+    // nothing to place, and the round trip's shuffle would cost a job
+    if (heavy.isEmpty) return df
     val loads = new Array[Long](bins)
     val assign = heavy.map { r =>
       var best = 0

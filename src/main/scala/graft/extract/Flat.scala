@@ -1,6 +1,6 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** `lib.Flat` parity (`/root/reference/lib/base.go:75-93`): the reference's
@@ -25,14 +25,5 @@ object Flat {
     val scalars = arrayCols.map(c => exploded.col(s"_zipped.$c").as(c))
     val keep = df.columns.filterNot(arrayCols.contains).map(col).toSeq
     exploded.select(keep ++ scalars: _*)
-  }
-
-  /** Positional variant keeping the index (posexplode). */
-  def flatWithIndex(df: DataFrame, arrayCols: Seq[String], idxName: String = "idx"): DataFrame = {
-    val zipped = arrays_zip(arrayCols.map(col): _*)
-    val exploded = df.select(df.columns.map(col) :+ posexplode(zipped).as(Seq(idxName, "_zipped")): _*)
-    val scalars = arrayCols.map(c => exploded.col(s"_zipped.$c").as(c))
-    val keep = df.columns.filterNot(arrayCols.contains).map(col).toSeq
-    exploded.select((keep :+ col(idxName)) ++ scalars: _*)
   }
 }

@@ -22,7 +22,6 @@ final case class Selector(
     before: Seq[EventSelector] = Nil,
     condition: Option[Condition] = None
 ) extends Serializable {
-  def isLeaf: Boolean = attrs.isEmpty
   def isXpath: Boolean = xpathScope.nonEmpty || xpath.nonEmpty
   /** `svcimpl.go:535-540` CssOrXpath. */
   def cssOrXpath: String = if (css.nonEmpty) css else xpath

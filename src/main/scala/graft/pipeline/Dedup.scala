@@ -308,18 +308,19 @@ object Dedup {
     }
   }
 
+  // minhashLshPairs' signature length, band count and prescreen margin
+  private val NumPerm = 128
+  private val Bands = 16
+  private val EstMargin = 0.125
+
   /** MinHash + LSH banding: candidates from band-bucket collisions, then
-    * exact-Jaccard verification. With the default `estMargin` the output
+    * exact-Jaccard verification. With the `EstMargin` prescreen the output
     * EQUALS [[ngramJaccardPairs]] ON THIS CORPUS — an empirical, seeded
     * (hence permanent) fact, NOT a structural guarantee: stage 2's
     * signature prescreen is probabilistically lossy in general (a pair
     * with exact J right at the 0.8 threshold sits only ~3.5σ above the
     * est-cutoff, ~2e-4 miss probability; the ~1e-12 figure below holds
-    * for this corpus's J ≥ 0.88 true pairs). Callers needing structural
-    * exactness pass `estMargin = threshold`, which disables the prescreen
-    * — banding then only prunes the pair space
-    * (recall = 1-(1-j^r)^bands) and exact verification decides every
-    * candidate.
+    * for this corpus's J ≥ 0.88 true pairs).
     *
     * Band geometry is tuned to THIS corpus's measured similarity profile
     * (template-generated texts: background Jaccard p50=0.45, p999=0.67;
@@ -338,7 +339,7 @@ object Dedup {
     *  2. Bucket-local candidate generation + signature prescreen: group by
     *     (band, bucket id), collect the members' (doc_id, signature), and
     *     emit only pairs whose ESTIMATED Jaccard (matching signature
-    *     components / numPerm) ≥ threshold - estMargin. The shuffle
+    *     components / NumPerm) ≥ threshold - EstMargin. The shuffle
     *     carries bands × 512 B per doc — constant per doc, never per pair —
     *     and the O(bucket²) estimator loop is in-memory integer compares.
     *     The margin makes the prescreen lossless on this corpus, not in
@@ -347,8 +348,6 @@ object Dedup {
     *     ~2e-4), while this corpus's true pairs (J ≥ 0.88) sit 7σ above
     *     (miss ~1e-12); the seeded determinism means the
     *     empirically-verified recall 1.0 is then permanent here.
-    *     `estMargin = threshold` disables the prescreen where structural
-    *     exactness matters more than the ~40× candidate reduction.
     *     (Skew note: a degenerate mega-bucket — e.g. identical boilerplate
     *     docs — serializes one task, exactly as a bucket self-join would;
     *     at 10^10 docs cap bucket size and route overflow through exact
@@ -359,9 +358,7 @@ object Dedup {
     *     list (AQE broadcasts), checked by a sorted-merge intersect with
     *     the size-ratio short-circuit. No driver-side collect anywhere.
     */
-  def minhashLshPairs(docs: DataFrame, k: Int = 3, threshold: Double = 0.8,
-                      numPerm: Int = 128, bands: Int = 16,
-                      estMargin: Double = 0.125): DataFrame = {
+  def minhashLshPairs(docs: DataFrame, k: Int = 3, threshold: Double = 0.8): DataFrame = {
     val kk = k
     // signature pass: ONE row per doc. The tiny single-split documents
     // input is spread across the session's cores first — the signature UDF
@@ -369,10 +366,10 @@ object Dedup {
     // layout. lazyCache (RDD persist, no CacheManager entry) makes the pass
     // run exactly once for its three consumers.
     val withSig = graft.engine.Layout.spread(docs.select(col("doc_id"), col("text")), "doc_id")
-      .select(col("doc_id"), minhashSigUdf(k, numPerm, bands)(col("text")).as("s"))
+      .select(col("doc_id"), minhashSigUdf(k, NumPerm, Bands)(col("text")).as("s"))
       .select(col("doc_id"), col("s._2").as("sig"),
         posexplode(col("s._1")).as(Seq("band", "bsig")))
-    // member = [doc_id hi, doc_id lo, sig_0 .. sig_{numPerm-1}] as ints —
+    // member = [doc_id hi, doc_id lo, sig_0 .. sig_{NumPerm-1}] as ints —
     // half of v1's long-array member bytes in the bucket shuffle. The
     // est-prescreen stays BUCKET-LOCAL (v1's shape): a measured funnel at
     // sf0.1 runs 643k raw intra-bucket pairs → 256 survivors, so a
@@ -384,7 +381,7 @@ object Dedup {
     val member = concat(
       array(shiftright(col("doc_id"), 32).cast("int"), col("doc_id").cast("int")),
       col("sig"))
-    val estCutoff = math.max(0, math.ceil((threshold - estMargin) * numPerm).toInt)
+    val estCutoff = math.max(0, math.ceil((threshold - EstMargin) * NumPerm).toInt)
     // bucket-local pair generation + est-prescreen: primitive compares,
     // one bucket per task row; emits (min,max) so cross-band duplicates
     // collapse in the distinct below

@@ -256,8 +256,6 @@ object XPath {
 
   def find(context: HElem, xpath: String): Vector[HNode] = find(context, parse(xpath))
 
-  def findFirst(context: HElem, xpath: String): Option[HNode] = find(context, xpath).headOption
-
   /** One step over the current node-set. Allocation-lean by design: the
     * step runs once per context node (and, for `//`, once per DESCENDANT
     * of each context node), so the previous per-parent collection churn —

@@ -22,6 +22,12 @@ class BenchSpec extends AnyFunSuite {
       .exists(p => new java.io.File(p, "graft/Bench.class").isFile))
   }
 
+  test("forwardedFlags: the parent's --add-opens and log4j configuration, in order, nothing else") {
+    val args = Seq("--add-opens=java.base/java.lang=ALL-UNNAMED",
+      "-Dlog4j.configurationFile=src/test/resources/log4j2.properties", "-Xss4m")
+    assert(Bench.forwardedFlags(args) == args.take(2))
+  }
+
   test("defaultCpus: this host's cores, capped at 32") {
     assert(Bench.defaultCpus == math.min(Runtime.getRuntime.availableProcessors, 32))
   }

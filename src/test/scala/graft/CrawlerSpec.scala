@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.Fixtures
 import graft.engine.{Crawler, Politeness}
@@ -202,5 +203,77 @@ class CrawlerSpec extends AnyFunSuite {
     val out = crawler().crawl(CrawlQueries.listJob, seeds(d => s"${Fixtures.base(d)}/list/p1.html"))
     val urls = out.select("url").distinct().count()
     assert(urls == 3 * 3) // 3 seeds x 3 pages, each exactly once
+  }
+
+  // the list job through crawl and the scroll job through crawlScroll,
+  // each with the seed page it starts from
+  private val entryPoints: Seq[(String, (Crawler, Seq[(String, String)]) => DataFrame, String)] = Seq(
+    ("list", (c, s) => c.crawl(CrawlQueries.listJob, s), "list/p1.html"),
+    ("scroll", (c, s) => c.crawlScroll(CrawlQueries.moreJob, s), "more/s1.html"))
+
+  private def sameSchema(name: String, empty: DataFrame, fetched: DataFrame): Unit =
+    assert(empty.schema == fetched.schema,
+      s"$name: names, order, types and nullability must match\n" +
+        s"${empty.schema.treeString}vs\n${fetched.schema.treeString}")
+
+  /** `body`'s result and the number of Spark jobs it submitted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsDuring")
+    try {
+      val out = body
+      // listener events are posted asynchronously: wait until the count settles
+      var last = -1
+      var spins = 0
+      while (jobs.get != last && spins < 40) { last = jobs.get; spins += 1; Thread.sleep(100) }
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("robots-blocked seeds: 0 rows, the schema of a crawl that fetched") {
+    val blockedSeeds = seeds(d => s"http://${Fixtures.host(d)}/blocked/d$d.html")
+    for ((name, crawlWith, page) <- entryPoints) {
+      val fetched = crawlWith(crawler(robots = true), seeds(d => s"${Fixtures.base(d)}/$page"))
+      assert(fetched.count() > 0, name)
+      val blocked = crawlWith(crawler(robots = true), blockedSeeds)
+      assert(blocked.count() == 0, name)
+      sameSchema(name, blocked, fetched)
+    }
+  }
+
+  test("maxRounds = 0: 0 rows, the schema of a crawl that fetched, no job past the seed checkpoint") {
+    for ((name, crawlWith, page) <- entryPoints) {
+      val pageSeeds = seeds(d => s"${Fixtures.base(d)}/$page")
+      val fetched = crawlWith(crawler(), pageSeeds)
+      assert(fetched.count() > 0, name)
+      val (noRound, jobs) = jobsDuring(
+        crawlWith(new Crawler(spark, corpus, Crawler.Config(maxRounds = 0)), pageSeeds))
+      // the seed frontier's checkpoint + count; the empty page rows plan
+      // to an empty relation and submit nothing
+      assert(jobs == 1, s"$name: $jobs jobs")
+      assert(noRound.count() == 0, name)
+      sameSchema(name, noRound, fetched)
+    }
+  }
+
+  test("maxRounds = 0 under wall-clock pacing: reading the empty result runs one job, as unpaced") {
+    val paced = new Crawler(spark, corpus, Crawler.Config(maxRounds = 0, realPace = true,
+      politeness = Politeness.Config(delayMinMs = 100L, delayMaxMs = 100L)))
+    val out = paced.crawl(CrawlQueries.listJob, seeds(d => s"${Fixtures.base(d)}/list/p1.html"))
+    val (rows, jobs) = jobsDuring(out.count())
+    assert(rows == 0)
+    // no host to bin-pack: the pacing layout's shuffle would add a job
+    assert(jobs == 1, s"$jobs jobs")
   }
 }
