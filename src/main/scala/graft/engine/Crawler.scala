@@ -137,8 +137,8 @@ final class Crawler(
     if (job.startPageBtn.css.isEmpty && job.startPageBtn.xpath.isEmpty) return seeds
     // The reference clicks the button via chromedp.BySearch, which accepts
     // BOTH css and xpath (`svcimpl.go:348-380`). Reuse the paginator's
-    // click-discovery path (nextPageUrl → clickTargetHref), which dispatches
-    // on selector kind and absolutizes the matched element's href.
+    // click-discovery path (Extractor.nextPageUrl → clickTargetHref), which
+    // dispatches on selector kind and absolutizes the matched element's href.
     val q = job.startPageBtn.cssOrXpath
     val btnSel =
       if (job.startPageBtn.xpath.nonEmpty || q.startsWith("/")) Selector(xpath = q)
@@ -169,6 +169,19 @@ final class Crawler(
       new FrontierStore(d, config.seenCompactEvery)(spark))
     val resumed = store.flatMap(_.loadLatest())
 
+    // robots Crawl-delay → per-host politeness gap floor, joined from the
+    // executor-parsed host dimension. One tiny driver job over the dim
+    // (which also fills its lazy cache) returns its host count, for the
+    // broadcast rule, and whether any host declares a delay (so delay-free
+    // crawls skip the per-round host-window shuffle entirely, as before).
+    val (robotsHosts, robotsHasDelay) =
+      if (!config.respectRobots) (0L, false)
+      else {
+        val r = robotsDim.agg(count(lit(1)), max(col("__r_delay_ms") > 0)).head()
+        (r.getLong(0), !r.isNullAt(1) && r.getBoolean(1))
+      }
+    val politenessActive = config.politeness.enabled || robotsHasDelay
+
     def robotsFilter(df: DataFrame): DataFrame =
       if (!config.respectRobots) df
       else {
@@ -181,18 +194,10 @@ final class Crawler(
         }
         val pathUdf = udf { (u: String) => Robots.pathOf(u) }
         df.withColumn("__r_host", hostOf(col("url")))
-          .join(robotsDim.drop("__r_delay_ms"), Seq("__r_host"), "left")
+          .join(Layout.broadcastIfSmall(robotsDim.drop("__r_delay_ms"), robotsHosts), Seq("__r_host"), "left")
           .filter(allowed(pathUdf(col("url")), col("__r_allows"), col("__r_disallows")))
           .drop("__r_host", "__r_allows", "__r_disallows")
       }
-
-    // robots Crawl-delay → per-host politeness gap floor, joined from the
-    // executor-parsed host dimension. One tiny driver probe on the cached
-    // dim decides whether any host declares a delay (so delay-free crawls
-    // skip the per-round host-window shuffle entirely, as before).
-    val robotsHasDelay = config.respectRobots &&
-      !robotsDim.filter(col("__r_delay_ms") > 0).isEmpty
-    val politenessActive = config.politeness.enabled || robotsHasDelay
 
     // per-round checkpoints are EAGER (lazy localCheckpoint under
     // multi-JVM local-cluster races executor block registration in the
@@ -261,8 +266,8 @@ final class Crawler(
     def withRobotsDelay(df: DataFrame): DataFrame =
       if (robotsHasDelay)
         df.join(
-          robotsDim.select(col("__r_host").as("host"),
-            when(col("__r_delay_ms") > 0, col("__r_delay_ms")).as("__robots_delay_ms")),
+          Layout.broadcastIfSmall(robotsDim.select(col("__r_host").as("host"),
+            when(col("__r_delay_ms") > 0, col("__r_delay_ms")).as("__robots_delay_ms")), robotsHosts),
           Seq("host"), "left")
       else df
 
@@ -482,11 +487,12 @@ final class Crawler(
     * host would multiply frontier rows and fetch the same url twice. The
     * winner is deterministic: min_by robots URL (the driver-side
     * broadcast Map this replaced was last-write-wins, i.e. arbitrary).
-    * Cached (tiny relative to the corpus) so the per-round filter joins
-    * reuse it, and deliberately NOT broadcast-hinted: AQE broadcasts it
-    * while it fits and falls back to a shuffled hash join at the
-    * 10^7–10^8-host scale where a driver-built broadcast would be a
-    * memory cliff.
+    * Behind a lazy cache (tiny relative to the corpus), so the per-round
+    * filter joins reuse it and no CacheManager entry outlives the crawler.
+    * Both joins go through `Layout.broadcastIfSmall` with the host count
+    * `run`'s delay probe returns: broadcast up to `Layout.BroadcastRows`
+    * hosts, a shuffled join past it, where a driver-built broadcast would
+    * be a memory cliff.
     */
   private lazy val robotsDim: DataFrame = {
     // the `*` group: the crawl rotates browser UAs (UserAgents.pool), so
@@ -498,7 +504,7 @@ final class Crawler(
       val r = Robots.parse(body)
       (Urls.host(url), r.allows, r.disallows, r.crawlDelayMs.getOrElse(-1L))
     }
-    corpus.filter(col("url").endsWith("/robots.txt"))
+    val dim = corpus.filter(col("url").endsWith("/robots.txt"))
       .select(col("url").as("__r_url"),
         parse(col("url"), col("html").cast("binary")).as("r"))
       .groupBy(col("r._1").as("__r_host"))
@@ -509,7 +515,7 @@ final class Crawler(
       .select(col("__r_host"), col("rules.__r_allows").as("__r_allows"),
         col("rules.__r_disallows").as("__r_disallows"),
         col("rules.__r_delay_ms").as("__r_delay_ms"))
-      .cache()
+    B.lazyCache(dim)
   }
 }
 

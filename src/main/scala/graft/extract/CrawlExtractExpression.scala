@@ -8,10 +8,12 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst `Expression` evaluating one page's full crawl step:
-  * selector-tree extraction + pagination-link discovery + paginate-condition
-  * + scroll-cursor accounting, in ONE call per row (one HTML parse per page
-  * — the reference instead pays a CDP round-trip per node per attr,
-  * `/root/reference/svcimpl.go:712-797`, its dominant cost; SURVEY.md §3.1).
+  * it decodes the row, parses the page once and makes ONE
+  * [[Extractor.extractPage]] / [[Extractor.extractScrollPage]] call, which
+  * returns the items, the next-page link, the scroll-cursor count and the
+  * paginate-condition verdict (the reference instead pays a CDP round-trip
+  * per node per attr, `svcimpl.go:712-797`, its dominant cost; SURVEY.md
+  * §3.1).
   *
   * A native expression (not a Scala UDF) so the job config rides in the
   * expression tree, null handling is explicit, and the output is produced
@@ -73,79 +75,27 @@ case class CrawlExtractExpression(
     // Deadline.Exceeded lands in the same recover path as an error row.
     graft.html.Deadline.arm(timeBudgetMs)
     try {
-      val htmlStr = htmlV match {
-        case b: Array[Byte]  => new String(b, java.nio.charset.StandardCharsets.UTF_8)
-        case s: UTF8String   => s.toString
-        case other           => other.toString
-      }
-      val doc = Extractor.parseDocument(htmlStr)
+      val doc = parse(htmlV)
       // cross-document iframe: the crawler joins the framed page's html in
       // when the job scopes into an iframe whose element carries only a src
-      val framed: Option[graft.html.HElem] =
+      val framed =
         if (!job.cssSelector.iframe) None
-        else iframeHtmlExpr.eval(input) match {
-          case null              => None
-          case b: Array[Byte]    => Some(Extractor.parseDocument(b))
-          case s: UTF8String     => Some(Extractor.parseDocument(s.toString))
-          case other             => Some(Extractor.parseDocument(other.toString))
-        }
-      val (items, nScope) =
-        if (scroll) Extractor.extractScrollPage(doc, job, url, mode, cursor, framed)
-        else (Extractor.extractPage(doc, job, pageNo, url, mode, framed)._1, 0)
-      val nextUrl = nextPageUrl(doc, job, pageNo, url, mode)
-      // last-page guard L3 (`svcimpl.go:442-447,589-599`): condition read
-      // against the (possibly iframe-scoped) page
-      val condCtx = Extractor.iframeFather(doc, job.cssSelector).getOrElse(doc)
-      val goon =
-        try Extractor.execEventCondition(condCtx, job.paginatorCondition)
-        catch { case _: Exception => false }
-      val abs = if (nextUrl.nonEmpty) graft.urls.Urls.resolve(url, nextUrl) else ""
-      result(items, abs, nScope, goon, null)
+        else Option(iframeHtmlExpr.eval(input)).map(parse)
+      val page =
+        if (scroll) Extractor.extractScrollPage(doc, job, url, mode, cursor, framed, pageNo)
+        else Extractor.extractPage(doc, job, pageNo, url, mode, framed)
+      val abs = if (page.nextUrl.nonEmpty) graft.urls.Urls.resolve(url, page.nextUrl) else ""
+      result(page.items, abs, page.nScope, page.goon, null)
     } catch {
       case e: Exception =>
         result(Vector.empty, "", 0, goon = false, Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
     } finally graft.html.Deadline.disarm()
   }
 
-  /** Pagination-link discovery (L4/L6, SURVEY.md §2.3).
-    *
-    * The reference has two mechanisms: (a) `nextPageUrl` *extraction* —
-    * xpath `FindOne(doc, p.Xpath)`, or css only when BOTH `Paginator.Css`
-    * and `Paginator.Attr` are set (`svcimpl.go:872-885`); and (b) the
-    * actual *navigation* — a JS click on the first node matching the
-    * paginator (`svcimpl.go:449-465`). On a static corpus the click's
-    * target URL is the matched element's `href` (or its first descendant
-    * `a[href]`'s — the common `<li><a href>` pattern); click-without-href
-    * JS pagination is inherently dynamic and yields "" (flagged via the
-    * empty successor, SURVEY.md L4).
-    */
-  private def nextPageUrl(doc: graft.html.HElem, job: Job, pageNo: Int, baseUrl: String, mode: AttrMode): String = {
-    val p0 = job.resolvedPaginator(pageNo)
-    // the reference's click resolves via chromedp.BySearch, which accepts an
-    // xpath in the Css field too (`iframe_test.go:79` does exactly that) —
-    // dispatch on the leading '/'
-    val p = if (p0.xpath.isEmpty && p0.css.startsWith("/")) p0.copy(xpath = p0.css, css = "") else p0
-    if (p.xpath.nonEmpty) {
-      if (graft.xpath.XPathAttr.isAttrPath(p.xpath))
-        try graft.xpath.XPathAttr.findOne(doc, p.xpath) catch { case _: Exception => "" }
-      else {
-        graft.xpath.XPath.find(doc, p.xpath).collectFirst { case e: graft.html.HElem => e }
-          .map(clickTargetHref).getOrElse("")
-      }
-    } else if (p.css.nonEmpty) {
-      if (p.attr.nonEmpty)
-        graft.css.Css.selectFirst(doc, p.css).map(Extractor.readAttr(_, p.attr, baseUrl, mode)).getOrElse("")
-      else
-        graft.css.Css.selectFirst(doc, p.css).map(clickTargetHref).getOrElse("")
-    } else ""
+  private def parse(html: Any): graft.html.HElem = html match {
+    case b: Array[Byte] => Extractor.parseDocument(b)
+    case other          => Extractor.parseDocument(other.toString) // UTF8String
   }
-
-  private def clickTargetHref(e: graft.html.HElem): String =
-    e.attr("href").orElse {
-      e.selfAndDescendants.collectFirst {
-        case d if d.attrRaw("href") != null => d.attrRaw("href")
-      }
-    }.getOrElse("")
 
   private def result(items: Vector[XVal], nextUrl: String, nScope: Int, goon: Boolean, error: String): InternalRow =
     new GenericInternalRow(Array[Any](
@@ -171,7 +121,4 @@ object CrawlExtractExpression {
       ExpressionUtils.expression(iframeHtml),
       job, mode, scroll, timeBudgetMs))
   }
-
-  def apply(html: Column, url: Column, job: Job): Column =
-    apply(html, url, lit(1), lit(0), job)
 }

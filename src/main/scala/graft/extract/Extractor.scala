@@ -47,8 +47,8 @@ object Extractor {
     * corpus the iframe subtree is either inlined (SURVEY.md P12) or, for a
     * cross-document iframe (`src` pointing at another corpus url), the
     * framed page is joined in by the crawler and its parsed document
-    * replaces the empty iframe element as the extraction context — see
-    * [[resolveIframeContext]].
+    * replaces the empty iframe element as the extraction context (see
+    * [[extractPage]]).
     */
   def iframeFather(doc: HElem, sel: Selector): Option[HElem] =
     if (!sel.iframe) None
@@ -60,75 +60,103 @@ object Extractor {
       case None => Css.selectFirst(doc, "iframe")
     }
 
-  /** Cross-document iframe (reference: chromedp switches into the frame's
-    * own document, `svcimpl.go:638-656`): when the matched iframe element
-    * has no inlined content and the crawler supplied the framed page,
-    * extraction scopes against the framed DOCUMENT (so scopes like
-    * `body > form > table` resolve as they would inside the live frame).
+  /** One page's crawl step: the extracted items in document order, the
+    * next-page url as the page writes it ("" if none; the caller resolves
+    * it against the page url), the scope-node count (the scroll cursor's
+    * step; 0 on a paginated page) and the paginate condition's verdict.
     */
-  def resolveIframeContext(doc: HElem, sel: Selector, framed: Option[HElem]): Option[HElem] =
-    iframeFather(doc, sel) match {
-      case Some(el) if framed.isDefined && !el.children.exists(_.isInstanceOf[HElem]) => framed
-      case other => other
-    }
+  final case class PageStep(items: Vector[XVal], nextUrl: String, nScope: Int, goon: Boolean)
 
-  /** Top-level extraction for one page: the body of `r.extract`
-    * (`svcimpl.go:850-888`) minus browser plumbing. Returns (items,
-    * nextPageUrl).
+  /** The crawl step for one paginated page: the body of `r.extract`
+    * (`svcimpl.go:850-888`) minus browser plumbing, plus the next-page link
+    * of [[nextPageUrl]] and the last-page guard L3 (`svcimpl.go:442-447,
+    * 589-599`). `framed` is the framed page the crawler joined in for a
+    * cross-document iframe.
     */
   def extractPage(doc: HElem, job: Job, pageNo: Int, baseUrl: String, mode: AttrMode,
-                  framed: Option[HElem] = None): (Vector[XVal], String) = {
-    val father = resolveIframeContext(doc, job.cssSelector, framed)
-    val p = job.resolvedPaginator(pageNo)
-    if (job.cssSelector.isXpath) {
-      // xpath path works on the (possibly iframe-scoped) document snapshot
-      val ctx = father.getOrElse(doc)
-      val items = populateX(job.cssSelector, ctx)
-      val nextUrl =
-        if (p.xpath.nonEmpty) tryOrEmpty(XPathAttr.findOne(ctx, p.xpath))
-        else ""
-      (items, nextUrl)
-    } else {
-      val items = populate(father.orNull, job.cssSelector, doc, baseUrl, mode)
-      val nextUrl =
-        if (p.css.nonEmpty && p.attr.nonEmpty)
-          Css.selectFirst(doc, p.css).map(e => readAttr(e, p.attr, baseUrl, mode)).getOrElse("")
-        else ""
-      (items, nextUrl)
-    }
-  }
+                  framed: Option[HElem] = None): PageStep =
+    step(doc, job, job.cssSelector, pageNo, baseUrl, mode, framed, scroll = false)
 
-  /** Scroll variant: also returns the next cursor = count of scope nodes
-    * matched this round (`svcimpl_scroll.go:430-448`); caller adds the old
-    * cursor (`svcimpl_scroll.go:426`).
+  /** The crawl step for one scroll state: the cursor rewrite
+    * (`svcimpl_scroll.go:363-372`; css scope → `orig:nth-child(n+cursor+1)`,
+    * xpath scope → CursorScopeByPosition), then the same step as
+    * [[extractPage]], whose `nScope` counts the scope nodes matched this
+    * round (`svcimpl_scroll.go:430-448`); the caller adds the old cursor
+    * (`svcimpl_scroll.go:426`).
     */
   def extractScrollPage(doc: HElem, job: Job, baseUrl: String, mode: AttrMode, cursor: Int,
-                        framed: Option[HElem] = None): (Vector[XVal], Int) = {
+                        framed: Option[HElem] = None, pageNo: Int = 1): PageStep = {
     val sel0 = job.cssSelector
-    // cursor rewrite (`svcimpl_scroll.go:363-372`): css scope →
-    // `orig:nth-child(n+cursor+1)`; xpath scope → CursorScopeByPosition.
     val sel =
       if (cursor <= 0) sel0
       else if (sel0.scope.nonEmpty) sel0.copy(scope = s"${sel0.scope}:nth-child(n+${cursor + 1})")
       else if (sel0.xpathScope.nonEmpty) sel0.copy(xpathScope = XPathAttr.cursorScopeByPosition(sel0.xpathScope, cursor + 1))
       else sel0
-    val father = resolveIframeContext(doc, sel, framed)
-    if (sel.isXpath) {
-      val ctx = father.getOrElse(doc)
-      val scopeNodes =
-        if (sel.xpathScope.nonEmpty) XPath.find(ctx, sel.xpathScope).collect { case e: HElem => e }
-        else Vector(ctx)
-      (populateX(sel, ctx), scopeNodes.length)
-    } else {
-      val scope = effectiveScope(sel, father.orNull)
-      val ctx = father.getOrElse(doc)
-      val nodes = if (scope.nonEmpty) tryCss(ctx, scope) else Vector(ctx)
-      (populate(father.orNull, sel, doc, baseUrl, mode), nodes.length)
-    }
+    step(doc, job, sel, pageNo, baseUrl, mode, framed, scroll = true)
   }
 
-  private def effectiveScope(sel: Selector, father: HElem): String =
-    if (sel.scope.isEmpty && father == null) "html" else sel.scope
+  private def step(doc: HElem, job: Job, sel: Selector, pageNo: Int, baseUrl: String, mode: AttrMode,
+                   framed: Option[HElem], scroll: Boolean): PageStep = {
+    // The iframe father, resolved once. The condition reads it (or the
+    // document). The items read the framed DOCUMENT instead when the matched
+    // iframe has no inlined content and the crawler supplied the framed page
+    // (chromedp switches into the frame's own document, `svcimpl.go:638-656`,
+    // so scopes like `body > form > table` resolve as inside the live frame).
+    val father = iframeFather(doc, sel)
+    val itemsFather = father match {
+      case Some(el) if framed.isDefined && !el.children.exists(_.isInstanceOf[HElem]) => framed
+      case other => other
+    }
+    val (items, nScope) =
+      if (sel.isXpath) {
+        // xpath path works on the (possibly iframe-scoped) document snapshot
+        val nodes = xpathScopeNodes(sel, itemsFather.getOrElse(doc))
+        (nodes.flatMap(recursivePopulateX(sel, _)), nodes.length)
+      } else {
+        val nodes = scopeNodes(itemsFather.orNull, sel, doc)
+        (populateNodes(nodes, sel, doc, baseUrl, mode), nodes.length)
+      }
+    val nextUrl = nextPageUrl(doc, job, pageNo, baseUrl, mode)
+    val goon =
+      try execEventCondition(father.getOrElse(doc), job.paginatorCondition)
+      catch { case _: Exception => false }
+    PageStep(items, nextUrl, if (scroll) nScope else 0, goon)
+  }
+
+  /** Pagination-link discovery (L4/L6, SURVEY.md §2.3).
+    *
+    * The reference has two mechanisms: (a) `nextPageUrl` *extraction* —
+    * xpath `FindOne(doc, p.Xpath)`, or css only when BOTH `Paginator.Css`
+    * and `Paginator.Attr` are set (`svcimpl.go:872-885`); and (b) the
+    * actual *navigation* — a JS click on the first node matching the
+    * paginator (`svcimpl.go:449-465`). On a static corpus the click's
+    * target URL is the matched element's `href` (or its first descendant
+    * `a[href]`'s — the common `<li><a href>` pattern); click-without-href
+    * JS pagination is inherently dynamic and yields "" (flagged via the
+    * empty successor, SURVEY.md L4).
+    */
+  private def nextPageUrl(doc: HElem, job: Job, pageNo: Int, baseUrl: String, mode: AttrMode): String = {
+    val p0 = job.resolvedPaginator(pageNo)
+    // the reference's click resolves via chromedp.BySearch, which accepts an
+    // xpath in the Css field too (`iframe_test.go:79` does exactly that) —
+    // dispatch on the leading '/'
+    val p = if (p0.xpath.isEmpty && p0.css.startsWith("/")) p0.copy(xpath = p0.css, css = "") else p0
+    if (p.xpath.nonEmpty) {
+      if (XPathAttr.isAttrPath(p.xpath))
+        try XPathAttr.findOne(doc, p.xpath) catch { case _: Exception => "" }
+      else XPath.find(doc, p.xpath).collectFirst { case e: HElem => e }.map(clickTargetHref).getOrElse("")
+    } else if (p.css.nonEmpty) {
+      if (p.attr.nonEmpty) Css.selectFirst(doc, p.css).map(readAttr(_, p.attr, baseUrl, mode)).getOrElse("")
+      else Css.selectFirst(doc, p.css).map(clickTargetHref).getOrElse("")
+    } else ""
+  }
+
+  private def clickTargetHref(e: HElem): String =
+    e.attr("href").orElse {
+      e.selfAndDescendants.collectFirst {
+        case d if d.attrRaw("href") != null => d.attrRaw("href")
+      }
+    }.getOrElse("")
 
   private def tryCss(ctx: HElem, selector: String): Vector[HElem] =
     try Css.selectAll(ctx, selector)
@@ -138,20 +166,39 @@ object Extractor {
     try Css.selectFirst(ctx, selector)
     catch { case _: Css.CssParseException => None }
 
-  private def tryOrEmpty(f: => String): String =
-    try f catch { case _: Exception => "" }
+  /** P8 record assembly (`svcimpl.go:779-795`, `:813-836`): one field per
+    * sub-selector that yields anything — its first value, or the whole list
+    * when `scoped(sub)` — and no record when none does.
+    */
+  private def record(attrMap: Map[String, Selector], scoped: Selector => Boolean)
+                    (values: Selector => Vector[XVal]): Option[XRec] = {
+    val data = scala.collection.mutable.Map[String, XVal]()
+    attrMap.foreach { case (attrName, sub) =>
+      val result = values(sub)
+      if (result.nonEmpty) data(attrName) = if (scoped(sub)) XList(result) else result.head
+    }
+    if (data.nonEmpty) Some(XRec(data.toMap)) else None
+  }
 
   // ------------------------------------------------------------- CSS path
 
   /** `svcimpl.go:690-798` populate. `father == null` ⇒ document context with
     * default scope "html".
     */
-  def populate(father: HElem, sel: Selector, doc: HElem, baseUrl: String, mode: AttrMode): Vector[XVal] = {
-    val scope = effectiveScope(sel, father)
-    val ctx = if (father != null) father else doc
-    val nodes: Vector[HElem] =
-      if (scope.nonEmpty) tryCss(ctx, scope)
-      else Vector(father) // father != null here by construction
+  def populate(father: HElem, sel: Selector, doc: HElem, baseUrl: String, mode: AttrMode): Vector[XVal] =
+    populateNodes(scopeNodes(father, sel, doc), sel, doc, baseUrl, mode)
+
+  /** The nodes `sel` reads: its scope's matches under `father` (under `doc`
+    * with default scope "html" when `father == null`), or `father` itself
+    * when the selector has no scope.
+    */
+  private def scopeNodes(father: HElem, sel: Selector, doc: HElem): Vector[HElem] =
+    if (father == null) tryCss(doc, if (sel.scope.isEmpty) "html" else sel.scope)
+    else if (sel.scope.nonEmpty) tryCss(father, sel.scope)
+    else Vector(father)
+
+  private def populateNodes(nodes: Vector[HElem], sel: Selector, doc: HElem, baseUrl: String,
+                            mode: AttrMode): Vector[XVal] = {
     val out = Vector.newBuilder[XVal]
     nodes.foreach { node =>
       sel.attrs match {
@@ -162,16 +209,7 @@ object Extractor {
           // P7 zero-value drop (`svcimpl.go:775-777`)
           if (value.nonEmpty) out += XStr(value)
         case Some(attrMap) =>
-          // P8 record assembly (`svcimpl.go:779-795`)
-          val data = scala.collection.mutable.Map[String, XVal]()
-          attrMap.foreach { case (attrName, sub) =>
-            val result = populate(node, sub, doc, baseUrl, mode)
-            if (result.nonEmpty) {
-              if (sub.scope.isEmpty) data(attrName) = result.head
-              else data(attrName) = XList(result)
-            }
-          }
-          if (data.nonEmpty) out += XRec(data.toMap)
+          record(attrMap, _.scope.nonEmpty)(populate(node, _, doc, baseUrl, mode)).foreach(out += _)
       }
     }
     out.result()
@@ -225,41 +263,31 @@ object Extractor {
   // ----------------------------------------------------------- XPath path
 
   /** `svcimpl.go:800-811` populateX. */
-  def populateX(sel: Selector, node: HElem): Vector[XVal] = {
-    if (sel.xpathScope.nonEmpty) {
-      val nodes = XPath.find(node, sel.xpathScope).collect { case e: HElem => e }
-      nodes.flatMap(n => recursivePopulateX(sel, n))
-    } else recursivePopulateX(sel, node)
-  }
+  def populateX(sel: Selector, node: HElem): Vector[XVal] =
+    if (sel.xpathScope.nonEmpty) xpathScopeNodes(sel, node).flatMap(recursivePopulateX(sel, _))
+    else recursivePopulateX(sel, node)
+
+  private def xpathScopeNodes(sel: Selector, node: HElem): Vector[HElem] =
+    if (sel.xpathScope.nonEmpty) XPath.find(node, sel.xpathScope).collect { case e: HElem => e }
+    else Vector(node)
 
   /** `svcimpl.go:813-836` recursivePopulateX. */
-  private def recursivePopulateX(sel: Selector, node: HElem): Vector[XVal] = {
+  private def recursivePopulateX(sel: Selector, node: HElem): Vector[XVal] =
     sel.attrs match {
       case None =>
         val value = retrieveByXpath(sel, node)
         if (value.nonEmpty) Vector(XStr(value)) else Vector.empty
       case Some(attrMap) =>
-        val data = scala.collection.mutable.Map[String, XVal]()
-        attrMap.foreach { case (attrName, sub) =>
-          val result = populateX(sub, node)
-          if (result.nonEmpty) {
-            if (sub.xpathScope.isEmpty) data(attrName) = result.head
-            else data(attrName) = XList(result)
-          }
-        }
-        if (data.nonEmpty) Vector(XRec(data.toMap)) else Vector.empty
+        record(attrMap, _.xpathScope.nonEmpty)(populateX(_, node)).toVector
     }
-  }
 
   /** `svcimpl.go:838-848` retrieveByXpath — note the deliberate re-application
     * of XpathScope beneath each scope node, faithful to the reference.
     */
-  private def retrieveByXpath(sel: Selector, node: HElem): String = {
-    if (sel.xpathScope.nonEmpty) {
-      val nodes = XPath.find(node, sel.xpathScope).collect { case e: HElem => e }
-      nodes.map(n => XPathAttr.findOne(n, sel.xpath)).mkString("")
-    } else XPathAttr.findOne(node, sel.xpath)
-  }
+  private def retrieveByXpath(sel: Selector, node: HElem): String =
+    if (sel.xpathScope.nonEmpty)
+      xpathScopeNodes(sel, node).map(n => XPathAttr.findOne(n, sel.xpath)).mkString("")
+    else XPathAttr.findOne(node, sel.xpath)
 
   // ------------------------------------------------------------ condition
 
@@ -280,13 +308,11 @@ object Extractor {
             }
             c.checkFunc(text, c.value)
           case GetAttributeValueEvent =>
-            val text = Css.selectFirst(ctx, c.execSelector.css)
-              .flatMap(_.attr(c.execSelector.attr)).getOrElse {
-                // AttributeValue on a found node with absent attr yields ""
-                if (Css.selectFirst(ctx, c.execSelector.css).isDefined) ""
-                else throw new NoSuchElementException(s"condition css: ${c.execSelector.css}")
-              }
-            c.checkFunc(text, c.value)
+            val el = Css.selectFirst(ctx, c.execSelector.css).getOrElse {
+              throw new NoSuchElementException(s"condition css: ${c.execSelector.css}")
+            }
+            // AttributeValue on a found node with absent attr yields ""
+            c.checkFunc(el.attr(c.execSelector.attr).getOrElse(""), c.value)
           case _ => true
         }
     }

@@ -498,15 +498,18 @@ object XPathAttr {
         }
     }
 
+  private val nthRe = java.util.regex.Pattern.compile("\\[(\\d+)\\]$")
+  private val condRe = java.util.regex.Pattern.compile("\\[(.+)\\]$")
+
   /** `lib.NthChildFromXpath` (`lib/xpath.go:35-42`). */
   def nthChildFromXpath(xpath: String): Option[Int] = {
-    val m = java.util.regex.Pattern.compile("\\[(\\d+)\\]$").matcher(xpath)
+    val m = nthRe.matcher(xpath)
     if (m.find()) Some(m.group(1).toInt) else None
   }
 
   /** `lib.NodeConditionFromXpath` (`lib/xpath.go:44-51`). */
   def nodeConditionFromXpath(xpath: String): Option[String] = {
-    val m = java.util.regex.Pattern.compile("\\[(.+)\\]$").matcher(xpath)
+    val m = condRe.matcher(xpath)
     if (m.find()) Some(m.group(1)) else None
   }
 
@@ -514,12 +517,11 @@ object XPathAttr {
     * only nodes at `position() >= cursor` come back — the scroll-crawl
     * incremental-dedup rewrite.
     */
-  def cursorScopeByPosition(xpathScope: String, cursor: Int): String =
-    nodeConditionFromXpath(xpathScope) match {
-      case Some(cond) =>
-        val prefix = java.util.regex.Pattern.compile("\\[(.+)\\]$").matcher(xpathScope).replaceAll("")
-        s"$prefix[$cond and $cursor<=position()]"
-      case None =>
-        s"$xpathScope[$cursor<=position()]"
-    }
+  def cursorScopeByPosition(xpathScope: String, cursor: Int): String = {
+    val m = condRe.matcher(xpathScope)
+    if (m.find()) {
+      val cond = m.group(1)
+      s"${m.replaceAll("")}[$cond and $cursor<=position()]"
+    } else s"$xpathScope[$cursor<=position()]"
+  }
 }

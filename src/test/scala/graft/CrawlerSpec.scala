@@ -119,6 +119,18 @@ class CrawlerSpec extends AnyFunSuite {
     assert(out == Set("d7")) // d0, d50 divisible by 5 → blocked
   }
 
+  test("robots dimension: two robots-respecting crawlers leave no CacheManager entry") {
+    spark.catalog.clearCache()
+    val s = seeds(d => if (d % 5 == 0) s"http://${Fixtures.host(d)}/blocked/d$d.html"
+      else s"http://${Fixtures.host(d)}/ok/d$d.html")
+    for (_ <- 1 to 2) {
+      val out = crawler(robots = true).crawl(CrawlQueries.robotsJob, s)
+        .filter(col("item").isNotNull).select("seed_id").collect().map(_.getString(0)).toSet
+      assert(out == Set("d7"))
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("edge semantics: concat-all, zero-drop, empty-record drop") {
     val out = crawler().crawl(CrawlQueries.edgeJob, seeds(d => s"${Fixtures.base(d)}/edge/e1.html"))
       .filter(col("item").isNotNull)
