@@ -362,23 +362,11 @@ object Css {
             case "$=" => v.nonEmpty && av.endsWith(v)
             case "*=" => v.nonEmpty && av.contains(v)
             case "~=" =>
-              // token scan without the per-call regex Pattern compile of
-              // split("\\s+"); the empty-v edge keeps split's exact
+              // the class-list tokens; the empty-v edge keeps split's
               // semantics (an attr value with leading whitespace yields a
               // leading "" token)
-              if (v.isEmpty) av.isEmpty || Character.isWhitespace(av.charAt(0))
-              else {
-                var i = 0
-                val n = av.length
-                var found = false
-                while (!found && i < n) {
-                  while (i < n && Character.isWhitespace(av.charAt(i))) i += 1
-                  val s = i
-                  while (i < n && !Character.isWhitespace(av.charAt(i))) i += 1
-                  found = i - s == v.length && av.regionMatches(s, v, 0, v.length)
-                }
-                found
-              }
+              if (v.isEmpty) av.isEmpty || HElem.isSpace(av.charAt(0))
+              else HElem.tokens(av).contains(v)
             case "|=" => av == v || av.startsWith(v + "-")
             case _    => false
           }

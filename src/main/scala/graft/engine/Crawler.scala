@@ -332,12 +332,8 @@ final class Crawler(
           val srcOf = udf { (html: Array[Byte], url: String) =>
             if (html == null) null
             else try {
-              val doc = Extractor.parseDocument(html)
-              Extractor.iframeFather(doc, sel) match {
-                case Some(el) if !el.children.exists(_.isInstanceOf[graft.html.HElem]) =>
-                  el.attr("src").filter(_.nonEmpty).map(s => Urls.resolve(url, s)).orNull
-                case _ => null
-              }
+              Extractor.iframeFather(Extractor.parseDocument(html), sel).filter(Extractor.followsSrc)
+                .flatMap(_.attr("src")).filter(_.nonEmpty).map(s => Urls.resolve(url, s)).orNull
             } catch { case _: Exception => null }
           }
           paced.withColumn("__iframe_src", srcOf(col("html"), col("url")))

@@ -1,8 +1,12 @@
 package graft.engine
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import java.nio.charset.StandardCharsets
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot layer for the crawl frontier + URL-seen state —
   * hand-rolled because the sandbox ships no Iceberg jar (SURVEY.md §4):
@@ -23,6 +27,7 @@ import java.nio.charset.StandardCharsets
   *      (the delta holds ONLY the round's newly-seen rows — commit I/O is
   *      O(batch) per round; the manifest's `seen_deltas` list is the
   *      Iceberg-style union a reader reconstructs the full seen set from),
+  *      each beside its `<part>.schema.json`,
   *   2. write `manifest-N.json.tmp` with the file list + delta list +
   *      metrics,
   *   3. atomic overwrite-rename to `manifest-N.json`, then to `latest.json`
@@ -32,11 +37,13 @@ import java.nio.charset.StandardCharsets
   * A reader never observes a half-written snapshot; re-running round N is
   * idempotent (the URL-seen anti-join absorbs replays, and a replayed
   * round overwrites its own delta dir without double-listing it;
-  * SURVEY.md §7 #4). Legacy v1 manifests (full `seen` table per round)
-  * still load.
+  * SURVEY.md §7 #4). Manifests are JSON trees written and read through
+  * Jackson; only the `graft-frontier-v2` format loads, and any other
+  * `format` fails with an error naming it and the store.
   */
 final class FrontierStore(val dir: String, val compactEvery: Int = 64)(
     implicit spark: SparkSession) {
+  import FrontierStore._
 
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
   private val root = new Path(dir)
@@ -47,58 +54,57 @@ final class FrontierStore(val dir: String, val compactEvery: Int = 64)(
   /** Root qualified against the store's FS so relative local paths and
     * scheme-less URIs land on the same FS the writers use. */
   private val qroot: Path = fs.makeQualified(root)
+  private val latestPath = new Path(qroot, "latest.json")
+  private val Json = new ObjectMapper()
 
-  private def writeBytes(p: Path, bytes: Array[Byte]): Unit = {
+  private def writeString(p: Path, s: String): Unit = {
     val out = fs.create(p, true)
-    try out.write(bytes) finally out.close()
+    try out.write(s.getBytes(UTF_8)) finally out.close()
   }
 
-  private def readBytes(p: Path): Array[Byte] = {
+  private def readString(p: Path): String = {
     val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toByteArray
-    } finally in.close()
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
-  private def atomicOverwriteRename(src: Path, dst: Path): Unit =
-    fc.rename(src, dst, Options.Rename.OVERWRITE)
+  private def roundDir(round: Int): Path = new Path(qroot, s"data/round=$round")
+
+  /** The one part reader: parquet dirs under the schema round `round`
+    * committed beside its `part` (`<part>.schema.json`), so an empty part
+    * (a finished crawl's frontier has no row groups) still reads, and each
+    * round keeps its own columns.
+    */
+  private def read(round: Int, part: String, dirs: Seq[String]): DataFrame =
+    spark.read.schema(DataType.fromJson(readString(new Path(roundDir(round), s"$part.schema.json")))
+      .asInstanceOf[StructType]).parquet(dirs: _*)
+
+  private def writeSchema(round: Int, part: String, df: DataFrame): Unit =
+    writeString(new Path(roundDir(round), s"$part.schema.json"), df.schema.json)
 
   final case class Snapshot(round: Int, frontier: DataFrame, seen: DataFrame)
 
-  /** Directories of the seen deltas committed so far (oldest first), i.e.
-    * the manifest's `seen_deltas` list. Initialized from `latest.json` on
-    * first use so a store that resumes an existing crawl keeps appending
-    * to the loaded chain. Mutated only by `commit`, which runs on the
-    * crawler's single-threaded ordered commit pool.
-    */
-  private var deltaDirs: Option[Seq[String]] = None
+  /** `latest.json`, or None on a new store; any format but v2 throws. */
+  private def readManifest(): Option[Manifest] =
+    if (!fs.exists(latestPath)) None
+    else {
+      val m = Json.readTree(readString(latestPath))
+      val format = m.path("format").asText()
+      if (format != Format)
+        throw new IllegalStateException(
+          s"frontier store $qroot: manifest format '$format' is not loadable (only $Format is)")
+      def strings(key: String) = m.path(key).elements().asScala.map(_.asText()).toSeq
+      Some(Manifest(m.path("round").asInt(), strings("seen_deltas"), strings("gc_pending")))
+    }
 
-  private def currentDeltaDirs(): Seq[String] = deltaDirs.getOrElse {
-    val latest = new Path(qroot, "latest.json")
-    val dirs =
-      if (!fs.exists(latest)) Seq.empty[String]
-      else {
-        val json = new String(readBytes(latest), StandardCharsets.UTF_8)
-        parseSeenDeltas(json).getOrElse(legacySeenDir(json).toSeq)
-      }
-    deltaDirs = Some(dirs)
-    dirs
-  }
-
-  /** Legacy v1 (full-seen) manifest: the round's `data/round=N/seen` table
-    * IS the chain's base — it must seed `deltaDirs`, or the first post-
-    * upgrade commit would list only its own delta and every pre-upgrade
-    * url would resurface as unseen after the next resume.
+  /** The manifest the next commit extends: read from `latest.json` on
+    * first use (or by `loadLatest`), so a store that resumes an existing
+    * crawl keeps appending to the loaded chain. Set by `loadLatest` and by
+    * `commit`, which runs on the crawler's single-threaded commit pool.
     */
-  private def legacySeenDir(json: String): Option[String] =
-    """"round"\s*:\s*(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-      .map(r => new Path(qroot, s"data/round=$r/seen"))
-      .filter(fs.exists)
-      .map(_.toString)
+  private var head: Option[Manifest] = None
+
+  private def currentHead(): Manifest =
+    head.orElse(readManifest()).getOrElse(Manifest(0, Nil, Nil))
 
   /** Commit round N. `seenDelta` is ONLY the round's newly-seen rows: the
     * store appends it as an immutable per-round delta dir and the manifest
@@ -109,30 +115,20 @@ final class FrontierStore(val dir: String, val compactEvery: Int = 64)(
     */
   def commit(round: Int, frontier: DataFrame, seenDelta: DataFrame, metrics: Seq[(String, Long)],
              partitionMetrics: Seq[(Int, Long)] = Nil): Unit = {
-    val base = new Path(qroot, s"data/round=$round")
+    val prev = currentHead() // first, so a store of another format writes nothing
+    val base = roundDir(round)
     // north-star frontier layout: partitioned by host_bucket, rows sorted
     // by priority within each file → a batch read prunes to eligible
     // buckets and gets priority order from file order (min/max stats)
-    if (frontier.columns.contains("host_bucket")) {
-      frontier
-        .repartition(org.apache.spark.sql.functions.col("host_bucket"))
-        .sortWithinPartitions("priority")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("host_bucket")
-        .parquet(new Path(base, "frontier").toString)
-    } else {
-      frontier.write.mode(SaveMode.Overwrite).parquet(new Path(base, "frontier").toString)
-    }
-    val deltaDir = new Path(base, "seen-delta")
-    seenDelta.write.mode(SaveMode.Overwrite).parquet(deltaDir.toString)
-    // schemas ride the snapshot so a COMPLETED crawl's empty frontier (zero
-    // parquet row groups → no inferable schema) still resumes cleanly
-    writeBytes(new Path(base, "frontier.schema.json"),
-      frontier.schema.json.getBytes(StandardCharsets.UTF_8))
-    writeBytes(new Path(base, "seen.schema.json"),
-      seenDelta.schema.json.getBytes(StandardCharsets.UTF_8))
+    frontier.repartition(col("host_bucket")).sortWithinPartitions("priority")
+      .write.mode(SaveMode.Overwrite).partitionBy("host_bucket")
+      .parquet(new Path(base, "frontier").toString)
+    val deltaDir = new Path(base, "seen-delta").toString
+    seenDelta.write.mode(SaveMode.Overwrite).parquet(deltaDir)
+    writeSchema(round, "frontier", frontier)
+    writeSchema(round, "seen", seenDelta)
     // a re-committed round (crash replay) must not list its delta twice
-    val chain = currentDeltaDirs().filterNot(_ == deltaDir.toString) :+ deltaDir.toString
+    val chain = prev.seenDeltas.filterNot(_ == deltaDir) :+ deltaDir
     // LSM-style compaction: the delta chain would otherwise grow
     // O(rounds) — a 10^4-round crawl's resume would union 10^4 parquet
     // dirs and every FS listing walks them all. When the chain exceeds
@@ -141,41 +137,50 @@ final class FrontierStore(val dir: String, val compactEvery: Int = 64)(
     // LSM tradeoff against the old every-round O(|seen|) rewrite; the
     // manifest swap stays atomic).
     val compacted = compactEvery > 0 && chain.size > compactEvery
-    val newDeltas =
-      if (compacted) {
-        val compactDir = new Path(base, "seen-compact")
-        spark.read.schema(seenDelta.schema).parquet(chain: _*)
-          .write.mode(SaveMode.Overwrite).parquet(compactDir.toString)
-        Seq(compactDir.toString)
-      } else chain
-    // on a compaction round the manifest's file list cites the compacted
-    // base (the delta dir it folded in is about to be GC'd)
-    val filesList = listParquet(new Path(base, "frontier")) ++
-      (if (compacted) listParquet(new Path(newDeltas.head)) else listParquet(deltaDir))
-    val json = manifestJson(round, filesList, newDeltas, metrics, partitionMetrics)
-    val tmp = new Path(qroot, s"manifest-$round.json.tmp")
-    writeBytes(tmp, json.getBytes(StandardCharsets.UTF_8))
-    atomicOverwriteRename(tmp, new Path(qroot, s"manifest-$round.json"))
-    val tmp2 = new Path(qroot, "latest.json.tmp")
-    writeBytes(tmp2, json.getBytes(StandardCharsets.UTF_8))
-    atomicOverwriteRename(tmp2, new Path(qroot, "latest.json"))
-    // only after the manifest rename (the commit point) does the chain advance
-    deltaDirs = Some(newDeltas)
-    // GC the superseded chain AFTER the commit point: without it every
-    // compaction leaks the ~compactEvery folded delta dirs plus the
-    // previous compacted base — ~rounds/compactEvery full copies of the
-    // seen table at the 10^10-url design point. The store is single-
-    // writer and readers open `latest.json`, so once the rename lands no
-    // NEW reader can reach the superseded dirs; a crash between rename
-    // and GC only leaks (the next compaction does not re-list them, and
-    // leaked dirs are never referenced). Deletion is best-effort and
-    // confined to this store's data/ tree.
-    if (compacted) {
-      val dataRoot = new Path(qroot, "data").toString
-      chain.foreach { d =>
-        if (d.startsWith(dataRoot))
-          try fs.delete(new Path(d), true) catch { case _: java.io.IOException => () }
+    val deltas =
+      if (!compacted) chain
+      else {
+        val compactDir = new Path(base, "seen-compact").toString
+        read(round, "seen", chain).write.mode(SaveMode.Overwrite).parquet(compactDir)
+        Seq(compactDir)
       }
+    val m = Json.createObjectNode()
+      .put("format", Format).put("round", round).put("committed_at", System.currentTimeMillis())
+    def strings(key: String, xs: Seq[String]): Unit = {
+      val a = m.putArray(key)
+      xs.foreach(a.add(_: String))
+    }
+    // the file list cites the live chain's newest dir: the round's delta,
+    // or on a compaction round the compacted base
+    strings("files", listParquet(new Path(base, "frontier")) ++ listParquet(new Path(deltas.last)))
+    strings("seen_deltas", deltas)
+    val ms = m.putObject("metrics")
+    metrics.foreach { case (k, v) => ms.put(k, v) }
+    val lineage = m.putArray("partition_lineage")
+    partitionMetrics.foreach { case (p, n) => lineage.addObject().put("partition", p).put("rows", n) }
+    val superseded = if (compacted) chain else Nil
+    strings("gc_pending", superseded)
+    val json = Json.writeValueAsString(m)
+    for (name <- Seq(s"manifest-$round.json", "latest.json")) {
+      val tmp = new Path(qroot, s"$name.tmp")
+      writeString(tmp, json)
+      fc.rename(tmp, new Path(qroot, name), Options.Rename.OVERWRITE)
+    }
+    // only after the manifest rename (the commit point) does the chain advance
+    head = Some(Manifest(round, deltas, superseded))
+    // GC one generation late: without it every compaction leaks the
+    // ~compactEvery folded delta dirs plus the previous compacted base —
+    // ~rounds/compactEvery full copies of the seen table at the
+    // 10^10-url design point. The dirs THIS commit superseded stay until
+    // the next commit lands, so a reader that opened the previous
+    // manifest can still scan its chain; this commit deletes the dirs the
+    // previous one superseded (its `gc_pending`, also read back on
+    // resume). A crash between rename and GC only leaks. Deletion is
+    // best-effort and confined to this store's data/ tree.
+    val dataRoot = new Path(qroot, "data").toString
+    prev.gcPending.filterNot(deltas.contains).foreach { d =>
+      if (d.startsWith(dataRoot))
+        try fs.delete(new Path(d), true) catch { case _: java.io.IOException => () }
     }
   }
 
@@ -185,68 +190,30 @@ final class FrontierStore(val dir: String, val compactEvery: Int = 64)(
     * unreferenced dir that the round's replay overwrites.
     */
   def commitPages(round: Int, pages: DataFrame): Unit = {
-    val dir = new Path(qroot, s"data/round=$round/pages")
-    pages.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-    writeBytes(new Path(qroot, s"data/round=$round/pages.schema.json"),
-      pages.schema.json.getBytes(StandardCharsets.UTF_8))
+    pages.write.mode(SaveMode.Overwrite).parquet(new Path(roundDir(round), "pages").toString)
+    writeSchema(round, "pages", pages)
   }
 
-  /** Union of all committed pages snapshots for rounds <= upToRound
-    * (one multi-path parquet read); None when no round persisted pages.
+  /** Union by name of all committed pages snapshots for rounds <=
+    * upToRound, each round read with its own schema (rounds sharing one
+    * schema read as one multi-path scan); None when no round persisted
+    * pages.
     */
   def loadPages(upToRound: Int): Option[DataFrame] = {
-    val rounds = manifestRounds().filter(_ <= upToRound)
-    val dirs = rounds.map(r => new Path(qroot, s"data/round=$r/pages"))
-      .filter(fs.exists).map(_.toString)
-    if (dirs.isEmpty) None
-    else {
-      val sp = rounds.reverseIterator
-        .map(r => new Path(qroot, s"data/round=$r/pages.schema.json"))
-        .find(fs.exists)
-      val reader = sp match {
-        case Some(p) => spark.read.schema(org.apache.spark.sql.types.DataType
-          .fromJson(new String(readBytes(p), StandardCharsets.UTF_8))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        case None => spark.read
-      }
-      Some(reader.parquet(dirs: _*))
-    }
+    val rounds = manifestRounds()
+      .filter(r => r <= upToRound && fs.exists(new Path(roundDir(r), "pages")))
+    rounds.groupBy(r => readString(new Path(roundDir(r), "pages.schema.json")))
+      .values.toSeq.sortBy(_.head)
+      .map(rs => read(rs.head, "pages", rs.map(r => new Path(roundDir(r), "pages").toString)))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
 
-  def loadLatest(): Option[Snapshot] = {
-    val latest = new Path(qroot, "latest.json")
-    if (!fs.exists(latest)) None
-    else {
-      val json = new String(readBytes(latest), StandardCharsets.UTF_8)
-      val round = """"round"\s*:\s*(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-      round.map { r =>
-        def schemaReader(part: String) = {
-          val sp = new Path(qroot, s"data/round=$r/$part.schema.json")
-          if (fs.exists(sp))
-            spark.read.schema(org.apache.spark.sql.types.DataType
-              .fromJson(new String(readBytes(sp), StandardCharsets.UTF_8))
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-          else spark.read
-        }
-        val frontier = schemaReader("frontier")
-          .parquet(new Path(qroot, s"data/round=$r/frontier").toString)
-        val seen = parseSeenDeltas(json) match {
-          case Some(dirs) =>
-            // delta layout: ONE multi-path parquet read unions the chain
-            // (file-source listing parallelizes; no per-delta plan nodes)
-            deltaDirs = Some(dirs)
-            schemaReader("seen").parquet(dirs: _*)
-          case None =>
-            // legacy (pre-delta) snapshot layout: one full seen table. It
-            // also SEEDS the delta chain, so post-upgrade commits carry
-            // the pre-upgrade seen set forward (first link of the chain).
-            val legacy = new Path(qroot, s"data/round=$r/seen").toString
-            deltaDirs = Some(Seq(legacy))
-            schemaReader("seen").parquet(legacy)
-        }
-        Snapshot(r, frontier, seen)
-      }
-    }
+  def loadLatest(): Option[Snapshot] = readManifest().map { m =>
+    head = Some(m)
+    // the seen chain is ONE multi-path parquet read (file-source listing
+    // parallelizes; no per-delta plan nodes)
+    Snapshot(m.round, read(m.round, "frontier", Seq(new Path(roundDir(m.round), "frontier").toString)),
+      read(m.round, "seen", m.seenDeltas))
   }
 
   def manifestRounds(): Seq[Int] = {
@@ -268,26 +235,14 @@ final class FrontierStore(val dir: String, val compactEvery: Int = 64)(
       out.sorted.toSeq
     }
   }
+}
 
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+private object FrontierStore {
+  val Format = "graft-frontier-v2"
 
-  private def manifestJson(round: Int, files: Seq[String], seenDeltas: Seq[String],
-                           metrics: Seq[(String, Long)],
-                           partitionMetrics: Seq[(Int, Long)]): String = {
-    val fs = files.map(jsonStr).mkString("[", ",", "]")
-    val sd = seenDeltas.map(jsonStr).mkString("[", ",", "]")
-    val ms = metrics.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val pm = partitionMetrics.map { case (p, n) => s"""{"partition":$p,"rows":$n}""" }.mkString("[", ",", "]")
-    s"""{"format":"graft-frontier-v2","round":$round,"committed_at":${System.currentTimeMillis()},"files":$fs,"seen_deltas":$sd,"metrics":$ms,"partition_lineage":$pm}"""
-  }
-
-  /** `seen_deltas` array from a manifest; None on a legacy (v1, full-seen)
-    * manifest so the reader falls back to `data/round=N/seen`.
+  /** What a manifest says the next commit builds on: the seen chain
+    * (oldest first) and the chain dirs its own commit superseded, which
+    * the NEXT commit deletes.
     */
-  private def parseSeenDeltas(json: String): Option[Seq[String]] =
-    """"seen_deltas"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(json).map { m =>
-      """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-    }
+  final case class Manifest(round: Int, seenDeltas: Seq[String], gcPending: Seq[String])
 }

@@ -149,8 +149,8 @@ object Politeness {
     * scheduled(k) = Σ gaps of wave leaders before k's wave. At c=1 this
     * reduces exactly to the previous per-request cumulative formula. All
     * windows share the host partitioning — one shuffle, reused exchanges.
-    */
-  /** `robotsDelayMs`: optional per-row gap floor from the host's
+    *
+    * `robotsDelayMs`: optional per-row gap floor from the host's
     * robots.txt `Crawl-delay` (null where the host declares none) — the
     * effective wave gap is `greatest(configured jitter, crawl-delay)`, and
     * a crawl-delay alone activates scheduling even when the engine's own

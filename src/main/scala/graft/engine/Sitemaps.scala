@@ -26,11 +26,6 @@ object Sitemaps {
         "loc" -> Selector(css = "loc"),
         "lastmod" -> Selector(css = "lastmod")))))
 
-  /** One row per `<url>` entry of every sitemap.xml document in the
-    * corpus: (sitemap_url, pos, url, lastmod). `url` is absolutized against
-    * the sitemap's own url (sitemaps must not reference foreign hosts —
-    * enforced here as the spec requires).
-    */
   /** Shared loc resolver: `<loc>` values absolutize against the document
     * that declared them (one definition — the urlset and sitemapindex
     * paths must never diverge on resolution/trim semantics).
@@ -39,6 +34,11 @@ object Sitemaps {
     if (loc == null) null else graft.urls.Urls.resolve(base, loc.trim)
   }
 
+  /** One row per `<url>` entry of every sitemap.xml document in the
+    * corpus: (sitemap_url, pos, url, lastmod). `url` is absolutized against
+    * the sitemap's own url (sitemaps must not reference foreign hosts —
+    * enforced here as the spec requires).
+    */
   def discover(corpus: DataFrame): DataFrame =
     urlsetEntries(corpus.filter(col("url").endsWith("/sitemap.xml")))
 

@@ -60,6 +60,13 @@ object Extractor {
       case None => Css.selectFirst(doc, "iframe")
     }
 
+  /** The cross-document iframe rule: a matched iframe with no element
+    * children is followed through its `src`, and the framed page stands in
+    * for its content. The crawler joins that page in; [[extractPage]]
+    * scopes into it.
+    */
+  def followsSrc(iframe: HElem): Boolean = !iframe.children.exists(_.isInstanceOf[HElem])
+
   /** One page's crawl step: the extracted items in document order, the
     * next-page url as the page writes it ("" if none; the caller resolves
     * it against the page url), the scope-node count (the scroll cursor's
@@ -99,12 +106,12 @@ object Extractor {
                    framed: Option[HElem], scroll: Boolean): PageStep = {
     // The iframe father, resolved once. The condition reads it (or the
     // document). The items read the framed DOCUMENT instead when the matched
-    // iframe has no inlined content and the crawler supplied the framed page
+    // iframe follows its src and the crawler supplied the framed page
     // (chromedp switches into the frame's own document, `svcimpl.go:638-656`,
     // so scopes like `body > form > table` resolve as inside the live frame).
     val father = iframeFather(doc, sel)
     val itemsFather = father match {
-      case Some(el) if framed.isDefined && !el.children.exists(_.isInstanceOf[HElem]) => framed
+      case Some(el) if framed.isDefined && followsSrc(el) => framed
       case other => other
     }
     val (items, nScope) =

@@ -60,21 +60,7 @@ final class HElem(
     if (classesCache == null) {
       classesCache = attrRaw("class") match {
         case null => Set.empty
-        case c =>
-          // hand-rolled whitespace split: String.split("\\s+") compiles a
-          // fresh regex Pattern per call — per-element cost in the
-          // million-pages-per-round parse path (same rationale as the
-          // linear attr scan above)
-          val b = Set.newBuilder[String]
-          var i = 0
-          val n = c.length
-          while (i < n) {
-            while (i < n && Character.isWhitespace(c.charAt(i))) i += 1
-            val s = i
-            while (i < n && !Character.isWhitespace(c.charAt(i))) i += 1
-            if (i > s) b += c.substring(s, i)
-          }
-          b.result()
+        case c => HElem.tokens(c).toSet
       }
     }
     classesCache
@@ -164,6 +150,34 @@ final class HElem(
 
 object HElem {
   private val noAttrs = Array.empty[String]
+
+  /** HTML's ASCII whitespace — U+0009, U+000A, U+000C, U+000D and U+0020 —
+    * the separator set of Chrome's `classList` and of CSS `~=`. Other
+    * Unicode spaces (U+000B, U+00A0, U+2028, ...) are token characters.
+    */
+  def isSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
+
+  /** The [[isSpace]]-separated tokens of a class-list attribute value.
+    * Hand-rolled: String.split("\\s+") compiles a fresh regex Pattern per
+    * call (per-element cost in the million-pages-per-round parse path) and
+    * its `\s` is not HTML's whitespace.
+    */
+  def tokens(s: String): Iterator[String] = new Iterator[String] {
+    private def skip(from: Int, space: Boolean): Int = {
+      var i = from
+      while (i < s.length && isSpace(s.charAt(i)) == space) i += 1
+      i
+    }
+    private var at = skip(0, space = true)
+    def hasNext: Boolean = at < s.length
+    def next(): String = {
+      val end = skip(at, space = false)
+      val t = s.substring(at, end)
+      at = skip(end, space = true)
+      t
+    }
+  }
 
   def apply(tag: String): HElem = new HElem(tag, noAttrs, noAttrs)
 

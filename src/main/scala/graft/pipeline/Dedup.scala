@@ -508,12 +508,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** 64-bit SimHash over word unigrams+bigrams (Charikar 2002; the Google
-    * near-dup fingerprint). Computed in one pass per row by a deterministic
-    * FNV-based scala function; candidate pairs via the 4-band pigeonhole
-    * trick (hamming ≤ 3 ⇒ at least one identical 16-bit band), verified
-    * with `bit_count` on the xor — all columnar after the UDF.
-    */
   /** Scalar SimHash (the UDF body) — also registered SQL-callable as
     * `graft_simhash64` by [[graft.functions.GraftFunctions]].
     */
@@ -551,6 +545,12 @@ object Dedup {
     (c: Column) => f(c)
   }
 
+  /** 64-bit SimHash over word unigrams+bigrams (Charikar 2002; the Google
+    * near-dup fingerprint). Computed in one pass per row by a deterministic
+    * FNV-based scala function; candidate pairs via the 4-band pigeonhole
+    * trick (hamming ≤ 3 ⇒ at least one identical 16-bit band), verified
+    * with `bit_count` on the xor — all columnar after the UDF.
+    */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val withSig = docs.select(col("doc_id"), simhash64(col("text")).as("sig"))
     val banded = withSig.select(col("doc_id"), col("sig"),

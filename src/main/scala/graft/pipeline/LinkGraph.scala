@@ -17,13 +17,6 @@ import graft.engine.Layout
   */
 object LinkGraph {
 
-  /** Aggregate extracted absolute hrefs into a weighted host-level edge
-    * list: (src_host, dst_host, n_links). Rows whose url or href has no
-    * extractable http(s) host are DROPPED — regexp_extract returns "" on
-    * no match (mailto:, protocol-relative, garbage hrefs are normal crawl
-    * output), and without the filter every such row would collapse onto a
-    * phantom "" node absorbing rank mass.
-    */
   /** The authority (host) of an http(s) url, or "" when there is none.
     * `?#` terminate the authority alongside `/` — `http://b.test?page=2`
     * is host `b.test`, not a distinct `b.test?page=2` node. ONE owner for
@@ -38,6 +31,13 @@ object LinkGraph {
     // and hand the graph a phantom edge instead of dropping the row
     regexp_extract(c, "^https?://([^/?#]+)", 1)
 
+  /** Aggregate extracted absolute hrefs into a weighted host-level edge
+    * list: (src_host, dst_host, n_links). Rows whose url or href has no
+    * extractable http(s) host are DROPPED — regexp_extract returns "" on
+    * no match (mailto:, protocol-relative, garbage hrefs are normal crawl
+    * output), and without the filter every such row would collapse onto a
+    * phantom "" node absorbing rank mass.
+    */
   def hostEdges(links: DataFrame, urlCol: String = "url", hrefCol: String = "out"): DataFrame =
     links.select(
         hostOf(col(urlCol)).as("src_host"),

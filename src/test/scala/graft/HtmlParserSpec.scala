@@ -168,6 +168,28 @@ class HtmlParserSpec extends AnyFunSuite {
     assert(Css.selectAll(listHtml, "a[title]").size == 3)
   }
 
+  test("class tokens: classes and ~= split on HTML's ASCII whitespace only") {
+    def inBody(cls: String): HElem = {
+      val body = HElem("body")
+      body.append(HElem("div", Seq("class" -> cls)))
+      body
+    }
+    for (sep <- Seq("\t", "\n", "\f", "\r", " ")) {
+      val body = inBody(s"${sep}a$sep${sep}b$sep")
+      val name = f"U+${sep.head.toInt}%04X"
+      assert(Css.selectFirst(body, "div").get.classes == Set("a", "b"), s"$name separates")
+      assert(Css.selectAll(body, "div[class~='b']").size == 1, s"$name separates for ~=")
+      assert(Css.selectAll(body, "div.a.b").size == 1)
+    }
+    for (nonSep <- Seq("\u000B", "\u00A0", "\u2028")) {
+      val body = inBody(s"a${nonSep}b")
+      val name = f"U+${nonSep.head.toInt}%04X"
+      assert(Css.selectFirst(body, "div").get.classes == Set(s"a${nonSep}b"), s"$name is a token character")
+      assert(Css.selectAll(body, "div[class~='a']").isEmpty, s"$name must not separate for ~=")
+      assert(Css.selectAll(body, "div.a").isEmpty, s"$name must not separate for .class")
+    }
+  }
+
   test("css: not, comma groups, adjacent sibling") {
     assert(Css.selectAll(listHtml, "li:not(.first):not(.last)").size == 1)
     assert(Css.selectAll(listHtml, "a.next:not(.disabled)").size == 1)

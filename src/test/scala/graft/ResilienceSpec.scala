@@ -59,6 +59,14 @@ class ResilienceSpec extends AnyFunSuite {
     df.select("seed_id", "url_hash").distinct().collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
 
+  /** A one-row frontier in the crawler's layout (it carries the
+    * `host_bucket` the store partitions by). */
+  private def frontierRow(round: Int): org.apache.spark.sql.DataFrame = {
+    val s = spark; import s.implicits._
+    Seq(("d0", s"http://x.test/p${round + 1}.html", round + 1, 0, "x.test", round.toLong, 0, 0))
+      .toDF("seed_id", "url", "page_no", "cursor", "host", "url_hash", "host_bucket", "priority")
+  }
+
   private def itemRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.filter(col("item").isNotNull)
       .select("seed_id", "url", "page_no", "pos", "item.title")
@@ -124,16 +132,88 @@ class ResilienceSpec extends AnyFunSuite {
       "compacted base must hold the identical URL-seen set")
     assert(snap.seen.count() == expectedSeen.size, "compaction must not duplicate rows")
 
-    // GC contract: every superseded chain dir (folded deltas AND prior
-    // compacted bases) is deleted after the manifest rename — without it
-    // each compaction leaks a full seen copy (~rounds/compactEvery copies
-    // at the 10^10-url design point). Only the live base survives.
+    // GC contract, one generation late: a commit deletes the chain dirs the
+    // PREVIOUS commit superseded (without it each compaction leaks a full
+    // seen copy, ~rounds/compactEvery copies at the 10^10-url design
+    // point). Round 2 folded rounds 1-2 into its base; round 3 folded that
+    // base and its own delta, so rounds 1-2's deltas are gone while round
+    // 3's superseded dirs wait in the manifest for the next commit.
     def exists(rel: String) = new java.io.File(s"$tmp/$rel").exists()
-    for (r <- 1 to 3; kind <- Seq("seen-delta", "seen-compact")
-         if !(r == 3 && kind == "seen-compact"))
-      assert(!exists(s"data/round=$r/$kind"),
-        s"superseded data/round=$r/$kind must be GC'd after compaction")
+    for (r <- 1 to 2)
+      assert(!exists(s"data/round=$r/seen-delta"),
+        s"data/round=$r/seen-delta, superseded two commits ago, must be GC'd")
+    for (rel <- Seq("data/round=2/seen-compact", "data/round=3/seen-delta")) {
+      assert(exists(rel), s"$rel, superseded by the latest commit, must survive until the next one")
+      assert(json.contains(rel + "\""), s"$rel must be listed as pending deletion: $json")
+    }
     assert(exists("data/round=3/seen-compact"), "the live compacted base must survive")
+  }
+
+  test("compaction GC waits one commit: a reader of the previous manifest still scans its seen") {
+    val s = spark; import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-gc-grace").toString
+    val store = new graft.engine.FrontierStore(tmp, compactEvery = 1)(spark)
+    def commit(st: graft.engine.FrontierStore, r: Int): Unit =
+      st.commit(r, frontierRow(r), Seq(("d0", r.toLong)).toDF("seed_id", "url_hash"), Nil)
+    commit(store, 1)
+    commit(store, 2) // compacts rounds 1-2 into round 2's base
+    val old = new graft.engine.FrontierStore(tmp)(spark).loadLatest().get.seen // lazy
+    commit(store, 3) // compacts again, superseding the base `old` scans
+    assert(old.count() == 2L)
+    assert(storeSeen(old) == Set(("d0", 1L), ("d0", 2L)),
+      "the previous manifest's chain must stay readable until the next commit lands")
+    // a resumed store reads the pending list back from the manifest and
+    // finishes the deletion at its first commit
+    commit(new graft.engine.FrontierStore(tmp, compactEvery = 1)(spark), 4)
+    assert(!new java.io.File(s"$tmp/data/round=2/seen-compact").exists(),
+      "the next commit must delete the dirs the previous one superseded")
+    assert(!new java.io.File(s"$tmp/data/round=3/seen-delta").exists())
+    assert(storeSeen(new graft.engine.FrontierStore(tmp)(spark).loadLatest().get.seen) ==
+      (1 to 4).map(r => ("d0", r.toLong)).toSet)
+  }
+
+  test("frontier store: a directory name containing ']' resumes with its full seen set") {
+    val s = spark; import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bracket").resolve("run]1").toString
+    val store = new graft.engine.FrontierStore(tmp)(spark)
+    for (r <- 1 to 2)
+      store.commit(r, frontierRow(r), Seq(("d0", r.toLong)).toDF("seed_id", "url_hash"), Nil)
+    val snap = new graft.engine.FrontierStore(tmp)(spark).loadLatest().get
+    assert(snap.round == 2)
+    assert(storeSeen(snap.seen) == Set(("d0", 1L), ("d0", 2L)),
+      "the manifest's seen chain must read back whatever characters its paths hold")
+  }
+
+  test("frontier store: loadPages keeps each round's own page columns") {
+    val s = spark; import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pages-schema").toString
+    val store = new graft.engine.FrontierStore(tmp)(spark)
+    store.commitPages(1, Seq(("d0", "only-in-1")).toDF("seed_id", "a"))
+    store.commit(1, frontierRow(1), Seq(("d0", 1L)).toDF("seed_id", "url_hash"), Nil)
+    store.commitPages(2, Seq(("d0", 7L)).toDF("seed_id", "b"))
+    store.commit(2, frontierRow(2), Seq(("d0", 2L)).toDF("seed_id", "url_hash"), Nil)
+    val pages = store.loadPages(2).get
+    val rows = pages.select("seed_id", "a", "b").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)), Option(r.get(2)))).toSet
+    assert(rows == Set(("d0", Some("only-in-1"), None), ("d0", None, Some(7L))),
+      "round 1's column a and round 2's column b must both keep their values")
+    assert(store.loadPages(1).get.columns.toSeq == Seq("seed_id", "a"))
+  }
+
+  test("frontier store: a manifest of any format but v2 fails loudly, naming the format") {
+    val s = spark; import s.implicits._
+    for (format <- Seq("graft-frontier-v1", "graft-frontier-v9")) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-format").toString
+      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "latest.json"),
+        s"""{"format":"$format","round":1,"files":[],"metrics":{}}""".getBytes("UTF-8"))
+      val store = new graft.engine.FrontierStore(tmp)(spark)
+      val e = intercept[IllegalStateException](store.loadLatest())
+      assert(e.getMessage.contains(format) && e.getMessage.contains(tmp), e.getMessage)
+      val c = intercept[IllegalStateException](
+        store.commit(2, frontierRow(2), Seq(("d0", 2L)).toDF("seed_id", "url_hash"), Nil))
+      assert(c.getMessage.contains(format), c.getMessage)
+      assert(!new java.io.File(s"$tmp/data").exists(), "a refused commit must write nothing")
+    }
   }
 
   test("resumed seen survives compaction GC (materialized off the store's parquet)") {
@@ -158,39 +238,6 @@ class ResilienceSpec extends AnyFunSuite {
     // and the pre-resume delta dir really was GC'd (the hazard existed)
     assert(!new java.io.File(s"$tmp/data/round=1/seen-delta").exists(),
       "compaction must have deleted the superseded pre-resume delta")
-  }
-
-  test("legacy v1 (full-seen) manifest: post-upgrade commits carry the legacy seen forward") {
-    val s = spark; import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-legacy-v1").toString
-    // fabricate a pre-delta (v1) store: round-1 full seen table + a
-    // manifest with NO seen_deltas field
-    val legacySeen = Seq(("d0", 111L), ("d0", 222L)).toDF("seed_id", "url_hash")
-    val legacyFrontier = Seq(("d0", "http://x/p2.html", 2, 0))
-      .toDF("seed_id", "url", "page_no", "cursor")
-    legacyFrontier.write.parquet(s"$tmp/data/round=1/frontier")
-    legacySeen.write.parquet(s"$tmp/data/round=1/seen")
-    java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "data/round=1/frontier.schema.json"),
-      legacyFrontier.schema.json.getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "data/round=1/seen.schema.json"),
-      legacySeen.schema.json.getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "latest.json"),
-      """{"format":"graft-frontier-v1","round":1,"files":[],"metrics":{}}""".getBytes("UTF-8"))
-
-    // path 1: a fresh store commits WITHOUT calling loadLatest first
-    // (currentDeltaDirs must seed the chain from the legacy table)
-    val store = new graft.engine.FrontierStore(tmp)(spark)
-    store.commit(2, legacyFrontier, Seq(("d0", 333L)).toDF("seed_id", "url_hash"), Nil)
-    val snap2 = new graft.engine.FrontierStore(tmp)(spark).loadLatest().get
-    assert(storeSeen(snap2.seen) == Set(("d0", 111L), ("d0", 222L), ("d0", 333L)),
-      "the first post-upgrade commit must list the legacy seen table in its chain")
-
-    // path 2: loadLatest-then-commit (the resume flow) keeps extending it
-    val store3 = new graft.engine.FrontierStore(tmp)(spark)
-    store3.loadLatest()
-    store3.commit(3, legacyFrontier, Seq(("d0", 444L)).toDF("seed_id", "url_hash"), Nil)
-    val snap3 = new graft.engine.FrontierStore(tmp)(spark).loadLatest().get
-    assert(storeSeen(snap3.seen) == Set(("d0", 111L), ("d0", 222L), ("d0", 333L), ("d0", 444L)))
   }
 
   test("persistPages: a resumed crawl replays pre-crash pages — result equals uninterrupted") {
