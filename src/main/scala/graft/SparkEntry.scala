@@ -663,8 +663,10 @@ object SparkEntry {
       |  SELECT 'h'||(doc_id%50)||'.test', 'h'||(doc_id%50)||'.test' FROM documents)""".stripMargin
 
   /** Integer fixed-point PageRank twin: K unrolled iteration CTEs with the
-    * exact `(85 * r * w) // (100 * outw)` arithmetic the Spark operator
-    * uses — any truncation or join discrepancy breaks the hash.
+    * exact `(w * ((85 * r) // ow)) // 100` arithmetic both paths of
+    * `LinkGraph.pagerank` use, and a rank row for every host of src ∪ dst
+    * (sinks included, floor only) — any truncation or join discrepancy
+    * breaks the hash.
     */
   private def pagerankCtes(iters: Int): String = {
     val head = new StringBuilder("WITH " + linkGraphEdgesCte + ",\n" +

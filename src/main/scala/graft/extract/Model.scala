@@ -2,11 +2,9 @@ package graft.extract
 
 import org.apache.spark.sql.types._
 
-/** Job / selector model — Scala mirror of the reference's config structs
-  * (`/root/reference/svc.go:12-90`), NOT of its execution. All driver-side
-  * config objects; serializable so they can ride inside Catalyst expressions
-  * to executors.
-  */
+// Job / selector model — Scala mirror of the reference's config structs
+// (`svc.go:12-90`), NOT of its execution. All driver-side config objects;
+// serializable so they can ride inside Catalyst expressions to executors.
 
 /** `svc.go:12-35` CssSelector. `attrs == None` ⇔ Go `Attrs == nil` (leaf). */
 final case class Selector(

@@ -10,9 +10,10 @@ import graft.engine.Layout
   *
   * Scale notes: `hostEdges` shuffles only (src_host, dst_host) pairs —
   * never page bytes — and the host dimension is orders of magnitude
-  * smaller than the page corpus (the 100 TB web is ~10^8 hosts). Each
-  * PageRank iteration is one shuffle keyed by dst_host; the edge
-  * dimension is cached once with its out-weight pre-joined so iterations
+  * smaller than the page corpus (the 100 TB web is ~10^8 hosts). PageRank
+  * runs on the driver while the edge list is within the broadcast bound;
+  * above it each iteration shuffles contributions by dst_host over an edge
+  * dimension cached once with its out-weight pre-joined, so iterations
   * never rescan the corpus.
   */
 object LinkGraph {
@@ -46,59 +47,110 @@ object LinkGraph {
       .groupBy("src_host", "dst_host")
       .agg(count(lit(1)).as("n_links"))
 
-  /** Deterministic fixed-point PageRank: ranks are integer micro-units of
-    * a total mass of `scale`, damping 0.85 applied as exact integer
-    * arithmetic (`85 * r * w div (100 * outw)`), so every engine — and
-    * every partitioning / re-execution of this plan — produces the
-    * IDENTICAL rank vector (integer sums are order-independent; float
-    * PageRank is not reproducible across engines or shuffle orders).
-    * Truncation loses at most 1 unit per in-edge per iteration — at
-    * scale = 10^12 that is noise, and determinism is what the frontier's
-    * priority column needs.
+  /** Deterministic fixed-point PageRank over a weighted host edge list
+    * `(src_host, dst_host, n_links)`, returned as `(host, rank)` ordered
+    * by host. Ranks are integer micro-units of a total mass of `scale`:
+    * every host starts at `scale / h` (h = distinct hosts), and each
+    * iteration sets
+    * {{{
+    * rank'(d) = (15 * (scale / h)) div 100
+    *          + Σ over edges s -> d of (n_links * ((85 * rank(s)) div ow(s))) div 100
+    * }}}
+    * where `ow(s)` is the sum of `n_links` over the edges leaving `s`.
+    * Each input row is one edge, so a repeated `(src, dst)` row counts
+    * twice. Integer sums do not depend on order, so every engine, every
+    * partitioning and both paths below produce the IDENTICAL rank vector
+    * (float PageRank is not reproducible across engines or shuffle
+    * orders). Truncation loses at most 1 unit per in-edge per iteration —
+    * at scale = 10^12 that is noise, and determinism is what the
+    * frontier's priority column needs.
     *
-    * Every host in `edges` has out-links by construction of the hub
-    * family, so no dangling-mass redistribution is needed; dangling mass
-    * from truncation simply decays (standard simplification).
+    * Hosts are src ∪ dst. A sink host (in-links, no out-links) still gets
+    * a rank row: its inbound mass lands and it passes none onward, so
+    * dangling mass decays rather than being redistributed (the standard
+    * simplification). An empty edge list gives an empty rank table.
+    *
+    * The edge input is persisted and counted once. At most
+    * [[Layout.BroadcastRows]] edges — a frame size Layout already ships
+    * whole to every executor as a broadcast — are collected and iterated
+    * in plain arrays on the driver: a 50-host graph needs no distributed
+    * plan (McSherry et al., "Scalability! But at what COST?", HotOS 2015).
+    * Above the bound each iteration is a join of the out-weighted edges
+    * with the rank, an aggregate by dst_host and a join back onto the
+    * host dimension, checkpointed so the plan never grows with `iters`.
     */
-  def pagerank(edges: DataFrame, iters: Int = 5, scale: Long = 1000000000000L): DataFrame = {
+  def pagerank(edges: DataFrame, iters: Int = 5, scale: Long = 1000000000000L): DataFrame =
+    pagerank(edges, iters, scale, onDriver = None)
+
+  /** [[pagerank]] with the path forced: `Some(true)` iterates on the
+    * driver, `Some(false)` in Spark, `None` picks by the edge count.
+    */
+  private[graft] def pagerank(edges: DataFrame, iters: Int, scale: Long,
+                              onDriver: Option[Boolean]): DataFrame = {
+    // Persist the edge input ONCE via lazyCache (RDD-level persist, NOT
+    // Dataset.cache): both paths read it again after the count, and
+    // without the persist each read would re-run the upstream edge
+    // extraction (a full crawl in the link_graph pipeline). Dataset.cache
+    // would leak strong CacheManager entries per call AND plan-fragment-
+    // match across calls — the exact failure lazyCache's scaladoc
+    // documents; RDD persists are cleaned by the ContextCleaner when the
+    // result goes unreachable.
+    val e = org.apache.spark.sql.GraftSqlBridge.lazyCache(edges)
+    val n = e.count()
+    if (onDriver.getOrElse(n <= Layout.BroadcastRows)) rankOnDriver(e, iters, scale)
+    else rankInSpark(e, n, iters, scale)
+  }
+
+  /** The initial rank `scale / h` and the per-iteration floor
+    * `(15 * (scale / h)) div 100`; an empty graph (h = 0) has no host to
+    * seed, so its share is never read.
+    */
+  private def shares(scale: Long, h: Long): (Long, Long) = {
+    val r0 = scale / math.max(h, 1L)
+    (r0, (15L * r0) / 100L)
+  }
+
+  private def rankOnDriver(e: DataFrame, iters: Int, scale: Long): DataFrame = {
+    val rows = e.select(col("src_host"), col("dst_host"), col("n_links").cast("long"))
+      .collect() // bounded: at most Layout.BroadcastRows edges
+    val hosts = rows.flatMap(r => Seq(r.getString(0), r.getString(1))).distinct.sorted
+    val index = hosts.zipWithIndex.toMap
+    val src = rows.map(r => index(r.getString(0)))
+    val dst = rows.map(r => index(r.getString(1)))
+    val w = rows.map(_.getLong(2))
+    val ow = new Array[Long](hosts.length)
+    for (i <- w.indices) ow(src(i)) += w(i)
+    val (r0, base) = shares(scale, hosts.length)
+    var rank = Array.fill(hosts.length)(r0)
+    for (_ <- 1 to iters) {
+      val next = Array.fill(hosts.length)(base)
+      // the factored damping of the Spark path below, term for term
+      for (i <- w.indices) next(dst(i)) += (w(i) * ((85L * rank(src(i))) / ow(src(i)))) / 100L
+      rank = next
+    }
+    e.sparkSession.createDataFrame(hosts.toSeq.zip(rank.toSeq)).toDF("host", "rank")
+      .orderBy("host")
+  }
+
+  private def rankInSpark(e: DataFrame, n: Long, iters: Int, scale: Long): DataFrame = {
     val B = org.apache.spark.sql.GraftSqlBridge
-    // Persist the edge input, the host dimension and the out-weighted edges
-    // ONCE each via lazyCache (RDD-level persist, NOT Dataset.cache): the
-    // iteration loop references them in every contribution plan, and
-    // without the persist each of the `iters` subplans would re-run the
-    // upstream edge extraction (a full crawl in the link_graph pipeline).
-    // Dataset.cache would leak strong CacheManager entries per call AND
-    // plan-fragment-match across calls — the exact failure lazyCache's
-    // scaladoc documents; RDD persists are cleaned by the ContextCleaner
-    // when the result goes unreachable.
-    val e = B.lazyCache(edges)
-    // hosts = src ∪ dst: a sink host (in-links, no out-links) still gets a
-    // rank row — its inbound mass lands, it just contributes none onward
-    // (the documented dangling-mass-decays simplification).
+    // the host dimension and the out-weighted edges are persisted too:
+    // every iteration's contribution plan references them
     val hosts0 = B.lazyCache(
       e.select(col("src_host").as("host"))
         .union(e.select(col("dst_host").as("host"))).distinct())
     val h = hosts0.count() // bounded: the host dimension, one scalar job
-    // empty graph (a hub extraction that matched nothing): an empty rank
-    // table with the right schema, not a divide-by-zero on scale / h
-    if (h == 0L)
-      return edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("host", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.LongType))))
-    // the h-count job materialized `e` too (hosts derive from it), so the
-    // edge count is one cheap cached-read job. Both dimensions are then read
-    // through narrow coalesces sized by their driver-known counts, and every
-    // per-iteration join has a side bounded by h rows (rank, out-weights,
-    // contributions), broadcast while h is small.
-    val eS = Layout.fit(e, e.count())
+    // Both dimensions are read through narrow coalesces sized by their
+    // driver-known counts, and every per-iteration join has a side
+    // bounded by h rows (rank, out-weights, contributions), broadcast
+    // while h is small.
+    val eS = Layout.fit(e, n)
     val hosts = Layout.fit(hosts0, h)
     def bcast(df: DataFrame): DataFrame = Layout.broadcastIfSmall(df, h)
     val ew = B.lazyCache(eS
       .join(bcast(eS.groupBy("src_host").agg(sum("n_links").as("ow"))), "src_host")
       .select(col("src_host"), col("dst_host"), col("n_links"), col("ow")))
-    val base = (15L * (scale / h)) / 100L
+    val (r0, base) = shares(scale, h)
     // Loop body: the r5 two-join shape, deliberately. A union-agg
     // restructure (fold the zero-contribution floor rows into the
     // contribution aggregate, one join per iteration) was tried and
@@ -109,7 +161,7 @@ object LinkGraph {
     // two-join shape computes rank INSIDE the broadcast-build job as a
     // pure broadcast-hash join over the cached host dimension — the
     // second "join" costs less than the exchange it would replace.
-    var rank = hosts.select(col("host"), lit(scale / h).as("rank"))
+    var rank = hosts.select(col("host"), lit(r0).as("rank"))
     for (_ <- 1 to iters) {
       // overflow-safe damping: divide by out-weight BEFORE multiplying by
       // the edge weight. 85*rank <= 85*scale and w*((85*rank) div ow) <=
@@ -121,8 +173,12 @@ object LinkGraph {
         .select(col("dst_host"),
           expr("(n_links * ((85 * rank) div ow)) div 100").as("c"))
         .groupBy("dst_host").agg(sum("c").as("inmass"))
+      // eager local checkpoint, as Dedup.nearDupClusters does for its
+      // labels: the next iteration plans over this leaf, so a 20-iteration
+      // rank never plans 40 joins
       rank = hosts.join(bcast(contrib), hosts("host") === contrib("dst_host"), "left")
         .select(hosts("host"), (lit(base) + coalesce(col("inmass"), lit(0L))).as("rank"))
+        .localCheckpoint(true)
     }
     rank.orderBy("host")
   }

@@ -187,11 +187,92 @@ class PipelineSpec extends AnyFunSuite {
     import s.implicits._
     val edges = Seq(("A", "B", 2L), ("B", "C", 1L), ("C", "A", 1L), ("A", "C", 1L))
       .toDF("src_host", "dst_host", "n_links")
+    // the Spark path (above Layout.BroadcastRows edges), forced: the three
+    // persists, plus the eager local checkpoint of each iteration's rank.
+    // One iteration: the next checkpoint truncates an earlier one's
+    // lineage, leaving it unreachable, and getPersistentRDDs holds weak
+    // values, so a GC inside a longer loop could hide it from the count.
     val before = (spark.sparkContext.getPersistentRDDs.keys ++ Iterator(-1)).max
-    val r = LinkGraph.pagerank(edges, iters = 3)
+    val r = LinkGraph.pagerank(edges, 1, 1000000000000L, onDriver = Some(false))
     val added = spark.sparkContext.getPersistentRDDs.keys.count(_ > before)
-    assert(added == 3, s"expected 3 persisted RDDs, found $added")
+    assert(added == 3 + 1, s"expected 3 persisted RDDs + 1 rank checkpoint, found $added")
     assert(r.count() == 3L)
+  }
+
+  test("pagerank on the driver path persists the edge input only") {
+    val s = spark
+    import s.implicits._
+    val edges = Seq(("A", "B", 2L), ("B", "C", 1L), ("C", "A", 1L), ("A", "C", 1L))
+      .toDF("src_host", "dst_host", "n_links")
+    val before = (spark.sparkContext.getPersistentRDDs.keys ++ Iterator(-1)).max
+    val r = LinkGraph.pagerank(edges, iters = 3) // 4 edges: below the bound
+    val added = spark.sparkContext.getPersistentRDDs.keys.count(_ > before)
+    assert(added == 1, s"expected the persisted edge input only, found $added")
+    assert(r.count() == 3L)
+  }
+
+  /** Weighted host graphs for the two-path differential: a hand-built one
+    * with a self-loop, a sink, single-out-edge hosts, a repeated
+    * (src, dst) row and a heavy pair, then seeded random ones mixing light
+    * and heavy n_links, with sink-only hosts and repeated rows. Heavy
+    * weights (10^12..10^15) put rank * n_links far past the ~1.1e17 at
+    * which an unfactored `85 * rank * n_links` wraps Long.
+    */
+  private def pagerankGraphs: Seq[(String, Seq[(String, String, Long)])] = {
+    val hand = Seq(("A", "A", 1L), ("A", "B", 1L), ("A", "B", 1L), ("B", "C", 2L),
+      ("D", "B", 1L), ("E", "F", 1000000000000000L), ("E", "A", 3L), ("F", "E", 1L))
+    val random = (1 to 2).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      // sources from h0..h19, destinations from h0..h29: h20..h29 are sinks
+      val base = Seq.fill(80) {
+        val w = if (rnd.nextInt(4) == 0) math.pow(10, 12 + rnd.nextInt(4)).toLong
+                else 1L + rnd.nextInt(5)
+        (s"h${rnd.nextInt(20)}.test", s"h${rnd.nextInt(30)}.test", w)
+      }
+      s"random seed $seed" -> (base ++ base.take(10)) // repeated rows
+    }
+    Seq("hand-built" -> hand, "empty" -> Seq.empty[(String, String, Long)]) ++ random
+  }
+
+  private def bothPaths(edges: org.apache.spark.sql.DataFrame, iters: Int) = {
+    val scale = 1000000000000L
+    val d = LinkGraph.pagerank(edges, iters, scale, onDriver = Some(true))
+    val sp = LinkGraph.pagerank(edges, iters, scale, onDriver = Some(false))
+    (d, sp)
+  }
+
+  private def assertSameRanks(d: org.apache.spark.sql.DataFrame,
+                              sp: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    assert(d.schema.map(f => (f.name, f.dataType)) == sp.schema.map(f => (f.name, f.dataType)),
+      s"$what: schemas differ: ${d.schema} vs ${sp.schema}")
+    assert(d.columns.toSeq == Seq("host", "rank"), what)
+    val dr = d.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val sr = sp.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(dr == sr, s"$what: driver and Spark ranks differ")
+  }
+
+  test("pagerank: driver and Spark paths give identical rank vectors on generated graphs") {
+    val s = spark
+    import s.implicits._
+    for ((name, rows) <- pagerankGraphs; iters <- Seq(1, 5, 20)) {
+      val edges = rows.toDF("src_host", "dst_host", "n_links")
+      val (d, sp) = bothPaths(edges, iters)
+      assertSameRanks(d, sp, s"$name, iters=$iters")
+      val hosts = rows.flatMap(r => Seq(r._1, r._2)).distinct
+      assert(d.count() == hosts.size.toLong, s"$name: one row per host of src ∪ dst")
+    }
+  }
+
+  test("pagerank: the Spark path at iters=20 plans at most one iteration's joins") {
+    val s = spark
+    import s.implicits._
+    val edges = pagerankGraphs.last._2.toDF("src_host", "dst_host", "n_links")
+    val (d, sp) = bothPaths(edges, 20)
+    val joins = sp.queryExecution.analyzed.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size
+    assert(joins <= 2, s"a checkpointed rank plans one iteration at most, found $joins joins")
+    assertSameRanks(d, sp, "iters=20")
   }
 
   test("pagerank on an empty edge list: empty rank table, not divide-by-zero") {
