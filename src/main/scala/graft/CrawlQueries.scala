@@ -325,7 +325,7 @@ object CrawlQueries {
     * it the sorted variant would pay a full range-partition sort exchange
     * for nothing on every invocation.
     */
-  private def hostEdgesUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def hostEdgesUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
     val seeds = Fixtures.seeds(spark, sfDir, d => s"${Fixtures.base(d)}/hub/index.html")
     val links = crawler(spark, sfDir).crawl(hubJob, seeds)
       .filter(col("item").isNotNull)

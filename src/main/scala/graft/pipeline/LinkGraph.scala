@@ -75,9 +75,14 @@ object LinkGraph {
     * whole to every executor as a broadcast — are collected and iterated
     * in plain arrays on the driver: a 50-host graph needs no distributed
     * plan (McSherry et al., "Scalability! But at what COST?", HotOS 2015).
-    * Above the bound each iteration is a join of the out-weighted edges
-    * with the rank, an aggregate by dst_host and a join back onto the
-    * host dimension, checkpointed so the plan never grows with `iters`.
+    * Above the bound each iteration is one join of the out-weighted edges
+    * with the broadcast rank and one aggregate by host, checkpointed so the
+    * plan never grows with `iters`. That checkpoint is a local one: it
+    * lives in executor block storage, so the Spark path is fail-stop on
+    * executor loss (the rank fails rather than recomputing from lineage),
+    * the trade `Dedup.nearDupClusters` makes for its labels. It runs only
+    * on graphs above the bound; no fixture or benchmark workload has one,
+    * so its cost at that size is unmeasured.
     */
   def pagerank(edges: DataFrame, iters: Int = 5, scale: Long = 1000000000000L): DataFrame =
     pagerank(edges, iters, scale, onDriver = None)
@@ -141,9 +146,8 @@ object LinkGraph {
         .union(e.select(col("dst_host").as("host"))).distinct())
     val h = hosts0.count() // bounded: the host dimension, one scalar job
     // Both dimensions are read through narrow coalesces sized by their
-    // driver-known counts, and every per-iteration join has a side
-    // bounded by h rows (rank, out-weights, contributions), broadcast
-    // while h is small.
+    // driver-known counts, and every join has a side bounded by h rows
+    // (out-weights, rank), broadcast while h is small.
     val eS = Layout.fit(e, n)
     val hosts = Layout.fit(hosts0, h)
     def bcast(df: DataFrame): DataFrame = Layout.broadcastIfSmall(df, h)
@@ -151,16 +155,9 @@ object LinkGraph {
       .join(bcast(eS.groupBy("src_host").agg(sum("n_links").as("ow"))), "src_host")
       .select(col("src_host"), col("dst_host"), col("n_links"), col("ow")))
     val (r0, base) = shares(scale, h)
-    // Loop body: the r5 two-join shape, deliberately. A union-agg
-    // restructure (fold the zero-contribution floor rows into the
-    // contribution aggregate, one join per iteration) was tried and
-    // MEASURED 2.5x SLOWER at fixture scale (round-6 A/B: 0.5-0.6 s vs
-    // 1.2-1.5 s warm): making each iteration's rank root an
-    // exchange+aggregate turns every bcast(rank) build into an AQE
-    // shuffle-stage job with 32-reducer writer/codec buffers, where the
-    // two-join shape computes rank INSIDE the broadcast-build job as a
-    // pure broadcast-hash join over the cached host dimension — the
-    // second "join" costs less than the exchange it would replace.
+    // every host's zero contribution: keeps a host without in-links in the
+    // rank, at the floor
+    val floor = hosts.select(col("host"), lit(0L).as("c"))
     var rank = hosts.select(col("host"), lit(r0).as("rank"))
     for (_ <- 1 to iters) {
       // overflow-safe damping: divide by out-weight BEFORE multiplying by
@@ -170,14 +167,22 @@ object LinkGraph {
       // ~1.1e17 (a heavy host pair at web scale). The DuckDB oracle uses
       // the identical factored arithmetic.
       val contrib = ew.join(bcast(rank), ew("src_host") === rank("host"))
-        .select(col("dst_host"),
+        .select(col("dst_host").as("host"),
           expr("(n_links * ((85 * rank) div ow)) div 100").as("c"))
-        .groupBy("dst_host").agg(sum("c").as("inmass"))
-      // eager local checkpoint, as Dedup.nearDupClusters does for its
+      // One join and one aggregate over contributions ∪ floor rows, then
+      // an eager local checkpoint, as Dedup.nearDupClusters does for its
       // labels: the next iteration plans over this leaf, so a 20-iteration
-      // rank never plans 40 joins
-      rank = hosts.join(bcast(contrib), hosts("host") === contrib("dst_host"), "left")
-        .select(hosts("host"), (lit(base) + coalesce(col("inmass"), lit(0L))).as("rank"))
+      // rank never plans 20 joins. Per iteration that is 3 jobs: the rank
+      // broadcast (a read of the checkpoint), the contribution shuffle and
+      // the checkpoint. Measured on the 148-edge, 50-host sf0.01 hub graph
+      // forced onto this path (4-core host, warm, median of 4): 0.84 s at
+      // 5 iterations and 1.84 s at 20, where the uncheckpointed loop took
+      // 1.13 s and 5.54 s at the same 3 jobs per iteration. A second join
+      // of the aggregate back onto the host dimension in place of the floor
+      // rows adds a 4th job per iteration (0.93 s and 2.21 s): it only paid
+      // while the rank was uncheckpointed, when the broadcast-build job
+      // computed it.
+      rank = contrib.union(floor).groupBy("host").agg((lit(base) + sum("c")).as("rank"))
         .localCheckpoint(true)
     }
     rank.orderBy("host")

@@ -182,20 +182,53 @@ class PipelineSpec extends AnyFunSuite {
     assert(r2 == r2b)
   }
 
+  /** `body`'s result and the ids of the persisted RDDs (cached or local-
+    * checkpointed) in the stages of the jobs it submits. Read from job-start
+    * events, not from `getPersistentRDDs`: that map holds its RDDs weakly,
+    * and once a rank checkpoint truncates the lineage to the persisted
+    * inputs (or to the previous checkpoint) a GC can drop them from it
+    * before the count.
+    */
+  private def persistedDuring[T](body: => T): (T, Set[Int]) = {
+    val sc = spark.sparkContext
+    val group = s"persisted-during-${System.nanoTime}"
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group) {
+          for (st <- js.stageInfos; rdd <- st.rddInfos if rdd.storageLevel.isValid) ids.add(rdd.id)
+          jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "persistedDuring")
+    try {
+      val out = body
+      // listener events are posted asynchronously: wait until the job count settles
+      var last = -1
+      var spins = 0
+      while (jobs.get != last && spins < 40) { last = jobs.get; spins += 1; Thread.sleep(100) }
+      import scala.jdk.CollectionConverters._
+      (out, ids.asScala.toSet)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("pagerank persists three RDDs per call: edges, host dimension, out-weighted edges") {
     val s = spark
     import s.implicits._
     val edges = Seq(("A", "B", 2L), ("B", "C", 1L), ("C", "A", 1L), ("A", "C", 1L))
       .toDF("src_host", "dst_host", "n_links")
     // the Spark path (above Layout.BroadcastRows edges), forced: the three
-    // persists, plus the eager local checkpoint of each iteration's rank.
-    // One iteration: the next checkpoint truncates an earlier one's
-    // lineage, leaving it unreachable, and getPersistentRDDs holds weak
-    // values, so a GC inside a longer loop could hide it from the count.
-    val before = (spark.sparkContext.getPersistentRDDs.keys ++ Iterator(-1)).max
-    val r = LinkGraph.pagerank(edges, 1, 1000000000000L, onDriver = Some(false))
-    val added = spark.sparkContext.getPersistentRDDs.keys.count(_ > before)
-    assert(added == 3 + 1, s"expected 3 persisted RDDs + 1 rank checkpoint, found $added")
+    // per-call persists plus the eager local checkpoint of each
+    // iteration's rank; a per-call persist moved into the loop adds one
+    // per iteration and breaks the count
+    val (r, ids) = persistedDuring(
+      LinkGraph.pagerank(edges, 3, 1000000000000L, onDriver = Some(false)))
+    assert(ids.size == 3 + 3, s"expected 3 persisted RDDs + 3 rank checkpoints, found $ids")
     assert(r.count() == 3L)
   }
 
@@ -204,10 +237,8 @@ class PipelineSpec extends AnyFunSuite {
     import s.implicits._
     val edges = Seq(("A", "B", 2L), ("B", "C", 1L), ("C", "A", 1L), ("A", "C", 1L))
       .toDF("src_host", "dst_host", "n_links")
-    val before = (spark.sparkContext.getPersistentRDDs.keys ++ Iterator(-1)).max
-    val r = LinkGraph.pagerank(edges, iters = 3) // 4 edges: below the bound
-    val added = spark.sparkContext.getPersistentRDDs.keys.count(_ > before)
-    assert(added == 1, s"expected the persisted edge input only, found $added")
+    val (r, ids) = persistedDuring(LinkGraph.pagerank(edges, iters = 3)) // 4 edges: below the bound
+    assert(ids.size == 1, s"expected the persisted edge input only, found $ids")
     assert(r.count() == 3L)
   }
 

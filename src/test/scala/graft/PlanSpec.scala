@@ -109,6 +109,18 @@ class PlanSpec extends AnyFunSuite {
       plan.linesIterator.filter(_.contains("Sort ")).mkString("\n"))
   }
 
+  test("pagerank_hosts: its edge input carries no global sort") {
+    // below Layout.BroadcastRows edges pagerank counts and collects its
+    // input eagerly, so the rank's own plan no longer shows that input:
+    // pin the input itself, against link_graph's sorted surface as the
+    // control that the pattern sees a sort where there is one
+    def globalSorts(df: org.apache.spark.sql.DataFrame): Int =
+      """Sort \[[^\]]*\], true""".r.findAllIn(planOf(df)).size
+    assert(globalSorts(CrawlQueries.linkGraph(spark, sf)) == 1)
+    val sorts = globalSorts(CrawlQueries.hostEdgesUnsorted(spark, sf))
+    assert(sorts == 0, s"pagerank's edge input pays $sorts range-partition sort(s) for nothing")
+  }
+
   test("ann_topk: query-side filter pushed to parquet scan") {
     val plan = planOf(PipelineQueries.annTopK(spark, sf))
     assert(plan.contains("PushedFilters") && plan.contains("LessThan(vec_id,20)"),
