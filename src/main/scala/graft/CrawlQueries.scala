@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.corpus.Fixtures
 import graft.engine.{Crawler, Politeness}
 import graft.extract._
@@ -286,7 +287,7 @@ object CrawlQueries {
     // DataFrame-native seed build (no driver collect — the column twins in
     // Fixtures own the url layout); the crawler re-orders the frontier by
     // (priority, host_bucket, seed_id, url) itself, so no sort here either
-    val seedDf = spark.read.parquet(s"$sfDir/documents.parquet")
+    val seedDf = Fixtures.documents(spark, sfDir)
       .select(concat(lit("d"), col("doc_id")).as("seed_id"),
         concat(Fixtures.baseCol(col("doc_id")), lit("/list/p1.html")).as("url"),
         (col("doc_id") % 10).cast("int").as("priority"))
@@ -352,34 +353,46 @@ object CrawlQueries {
     * Priority = position in the top-`budgetHosts` by (rank DESC, host) —
     * host breaks rank ties, so the mapping is total-ordered and
     * recompute-stable (the same determinism contract as the frontier
-    * slice itself). Computed as a distributed TakeOrdered top-K (never a
-    * global window: at 10^10 urls the host dimension is millions of rows,
-    * and a partition-less window would drag them all onto one task); the
-    * K winners — a bounded head, same discipline as the politeness LPT —
-    * come to the driver only to be numbered, and every below-budget host
-    * shares the floor level K so the batch cut falls on a level boundary.
+    * slice itself). Above the broadcast bound, where PageRank runs in
+    * Spark, it is a distributed TakeOrdered top-K (never a global window:
+    * at 10^10 urls the host dimension is millions of rows, and a
+    * partition-less window would drag them all onto one task), and the K
+    * winners — a bounded head, same discipline as the politeness LPT —
+    * come to the driver only to be numbered. Within the bound PageRank ran
+    * on the driver, so the winners are picked from its rank vector there.
+    * Every below-budget host shares the floor level K so the batch cut
+    * falls on a level boundary.
     */
   def crawlRankPrioritized(spark: SparkSession, sfDir: String): DataFrame = {
     val budgetHosts = 10
-    val top = pagerankHosts(spark, sfDir)
-      .orderBy(col("rank").desc, col("host")).limit(budgetHosts) // TakeOrdered, distributed
-      .collect().map(_.getString(0)) // bounded: K host names
-    import spark.implicits._
-    val prio = broadcast(
-      top.zipWithIndex.toSeq.toDF("host", "priority"))
-    // seeds left-join their host's priority; sub-budget hosts take the
-    // floor level so they stay IN the frontier, just below the cut
-    val seeds = spark.read.parquet(s"$sfDir/documents.parquet")
+    val top = graft.pipeline.LinkGraph.ranks(hostEdgesUnsorted(spark, sfDir)) match {
+      // the driver path's rank vector is already in memory: Spark's order
+      // (rank descending, then host by UTF-8 bytes), picked there
+      case Left(local) =>
+        local.sortBy { case (host, rank) => (-rank, UTF8String.fromString(host)) }
+          .take(budgetHosts).map(_._1)
+      case Right(ranked) =>
+        ranked.orderBy(col("rank").desc, col("host")).limit(budgetHosts) // TakeOrdered, distributed
+          .collect().map(_.getString(0)).toSeq // bounded: K host names
+    }
+    // a seed's priority is its host's position among the K winners, a
+    // K-branch CASE on the seed row rather than a join with a K-row table
+    // (no broadcast build per scan); sub-budget hosts take the floor level
+    // so they stay IN the frontier, just below the cut
+    val priority = top.zipWithIndex.foldLeft(lit(budgetHosts)) { case (rest, (host, i)) =>
+      when(col("host") === host, i).otherwise(rest)
+    }
+    val seeds = Fixtures.documents(spark, sfDir)
       .select(col("doc_id"), Fixtures.hostCol(col("doc_id")).as("host"))
-      .join(prio, Seq("host"), "left")
-      .withColumn("priority", coalesce(col("priority"), lit(budgetHosts)))
+      .withColumn("priority", priority)
       .select(concat(lit("d"), col("doc_id")).as("seed_id"),
         concat(Fixtures.baseCol(col("doc_id")), lit("/list/p1.html")).as("url"),
         col("priority"))
     // budget = every seed of the top-K hosts: the cut falls on a
     // priority boundary, so the oracle never depends on the intra-level
-    // (host_bucket) tiebreak
-    val cut = seeds.filter(col("priority") < budgetHosts).count()
+    // (host_bucket) tiebreak. Counted over the scan's rows in one stage:
+    // Dataset.count would plan a two-stage aggregate around it
+    val cut = seeds.filter(col("priority") < budgetHosts).queryExecution.toRdd.count()
     prioritySliceRows(spark, sfDir, seeds, cut)
   }
 

@@ -8,7 +8,7 @@ import graft.pipeline._
 object PipelineQueries {
 
   private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.corpus.Fixtures.documents(spark, sfDir)
 
   private def emb(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -22,7 +22,7 @@ object ScalingWorker {
     // bucketed-corpus plan whose per-round hash build parallelizes across
     // executors instead of serializing on the driver's broadcast build
     val shj = sys.env.get("SPARK_GRAFT_JOIN").contains("shj")
-    val baseDocs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val baseDocs = graft.corpus.Fixtures.documents(spark, sfDir)
       .selectExpr("doc_id", "text", "lang").as[graft.corpus.Fixtures.Doc].collect()
     // multiply the corpus ON EXECUTORS: broadcast the base docs once
     // (~10 MB) and parallelize only the multiplier indices — under

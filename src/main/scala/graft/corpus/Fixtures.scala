@@ -1,6 +1,7 @@
 package graft.corpus
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.html.Entities
 
 /** Deterministic synthetic web corpus (FIXTURES.md) with the exact
@@ -35,6 +36,17 @@ import graft.html.Entities
   *   /sitemap.xml               seed discovery: the doc's 3 list pages
   */
 object Fixtures {
+
+  /** The driver's `documents.parquet` (FIXTURES.md), read with its schema
+    * given: a schema-less parquet read runs a Spark job to infer it from
+    * the file footers, once per read.
+    */
+  val DocumentsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType), StructField("lang", StringType),
+    StructField("source", StringType), StructField("n_chars", LongType)))
+
+  def documents(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.schema(DocumentsSchema).parquet(s"$sfDir/documents.parquet")
 
   final case class Doc(doc_id: Long, text: String, lang: String)
   final case class Page(url: String, warc_ts: java.sql.Timestamp, html: Array[Byte], text: String, lang: String)
@@ -248,7 +260,7 @@ object Fixtures {
   def corpus(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     cache.getOrElseUpdate(sfDir + "@" + spark.hashCode(), {
       import spark.implicits._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = documents(spark, sfDir)
         .selectExpr("doc_id", "text", "lang").as[Doc]
       val n = docs.count()
       val df = docs.flatMap(d =>
@@ -273,7 +285,7 @@ object Fixtures {
   /** Seed helper: (seed_id, url) per document for a family path. */
   def seeds(spark: SparkSession, sfDir: String, firstUrl: Long => String): Seq[(String, String)] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    documents(spark, sfDir)
       .select("doc_id").as[Long].collect().sorted
       .map(d => (s"d$d", firstUrl(d))).toSeq
   }

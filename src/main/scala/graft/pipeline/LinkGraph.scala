@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.engine.Layout
 
 /** Host-level link graph + PageRank — the classic crawl-scale batch job
@@ -91,7 +95,24 @@ object LinkGraph {
     * driver, `Some(false)` in Spark, `None` picks by the edge count.
     */
   private[graft] def pagerank(edges: DataFrame, iters: Int, scale: Long,
-                              onDriver: Option[Boolean]): DataFrame = {
+                              onDriver: Option[Boolean]): DataFrame =
+    ranks(edges, iters, scale, onDriver) match {
+      case Left(local) =>
+        // external Rows with a schema become a LocalRelation through the
+        // interpreted converters; a Seq of tuples would compile an encoder
+        val schema = StructType(Seq(StructField("host", StringType),
+          StructField("rank", LongType, nullable = false)))
+        edges.sparkSession.createDataFrame(local.map { case (h, r) => Row(h, r) }.asJava, schema)
+          .orderBy("host")
+      case Right(ranked) => ranked
+    }
+
+  /** [[pagerank]]'s rank vector: `Left`, the `(host, rank)` pair of every
+    * host when the iterations ran on the driver (at most twice
+    * [[Layout.BroadcastRows]] hosts); `Right`, the Spark path's frame.
+    */
+  private[graft] def ranks(edges: DataFrame, iters: Int = 5, scale: Long = 1000000000000L,
+                           onDriver: Option[Boolean] = None): Either[Seq[(String, Long)], DataFrame] = {
     // Persist the edge input ONCE via lazyCache (RDD-level persist, NOT
     // Dataset.cache): both paths read it again after the count, and
     // without the persist each read would re-run the upstream edge
@@ -99,11 +120,18 @@ object LinkGraph {
     // would leak strong CacheManager entries per call AND plan-fragment-
     // match across calls — the exact failure lazyCache's scaladoc
     // documents; RDD persists are cleaned by the ContextCleaner when the
-    // result goes unreachable.
-    val e = org.apache.spark.sql.GraftSqlBridge.lazyCache(edges)
-    val n = e.count()
-    if (onDriver.getOrElse(n <= Layout.BroadcastRows)) rankOnDriver(e, iters, scale)
-    else rankInSpark(e, n, iters, scale)
+    // result goes unreachable. The count, and the driver path's collect,
+    // are plain RDD jobs over the persisted rows: they plan no query and
+    // compile no generated class. That matters at every call, not just the
+    // first: Spark keeps 100 generated classes per JVM by default
+    // (spark.sql.codegen.cache.maxEntries), and a workload that cycles
+    // through more than that, as perfbench's textpipe does, recompiles
+    // each class on every call.
+    val (rows, e) = org.apache.spark.sql.GraftSqlBridge.lazyCacheRows(
+      edges.select(col("src_host"), col("dst_host"), col("n_links").cast("long")))
+    val n = rows.count()
+    if (onDriver.getOrElse(n <= Layout.BroadcastRows)) Left(rankOnDriver(rows, iters, scale))
+    else Right(rankInSpark(e, n, iters, scale))
   }
 
   /** The initial rank `scale / h` and the per-iteration floor
@@ -115,14 +143,14 @@ object LinkGraph {
     (r0, (15L * r0) / 100L)
   }
 
-  private def rankOnDriver(e: DataFrame, iters: Int, scale: Long): DataFrame = {
-    val rows = e.select(col("src_host"), col("dst_host"), col("n_links").cast("long"))
+  private def rankOnDriver(rows: RDD[InternalRow], iters: Int, scale: Long): Seq[(String, Long)] = {
+    val edges = rows.map(r => (r.getUTF8String(0).toString, r.getUTF8String(1).toString, r.getLong(2)))
       .collect() // bounded: at most Layout.BroadcastRows edges
-    val hosts = rows.flatMap(r => Seq(r.getString(0), r.getString(1))).distinct.sorted
+    val hosts = edges.flatMap(r => Seq(r._1, r._2)).distinct.sorted
     val index = hosts.zipWithIndex.toMap
-    val src = rows.map(r => index(r.getString(0)))
-    val dst = rows.map(r => index(r.getString(1)))
-    val w = rows.map(_.getLong(2))
+    val src = edges.map(r => index(r._1))
+    val dst = edges.map(r => index(r._2))
+    val w = edges.map(_._3)
     val ow = new Array[Long](hosts.length)
     for (i <- w.indices) ow(src(i)) += w(i)
     val (r0, base) = shares(scale, hosts.length)
@@ -133,8 +161,7 @@ object LinkGraph {
       for (i <- w.indices) next(dst(i)) += (w(i) * ((85L * rank(src(i))) / ow(src(i)))) / 100L
       rank = next
     }
-    e.sparkSession.createDataFrame(hosts.toSeq.zip(rank.toSeq)).toDF("host", "rank")
-      .orderBy("host")
+    hosts.toSeq.zip(rank)
   }
 
   private def rankInSpark(e: DataFrame, n: Long, iters: Int, scale: Long): DataFrame = {

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Tiny shim over Spark's `private[sql]` Column↔Expression bridge
@@ -81,12 +82,18 @@ object GraftSqlBridge {
     * instead of failing the job (and there is no post-action
     * missing-block scan to race executor registration under multi-JVM).
     */
-  def lazyCache(df: DataFrame): DataFrame = {
+  def lazyCache(df: DataFrame): DataFrame = lazyCacheRows(df)._2
+
+  /** [[lazyCache]], also returning the persisted rows themselves. A caller
+    * that only counts or collects them runs a plain RDD job: no query to
+    * plan, no SQL execution, no generated class to compile.
+    */
+  def lazyCacheRows(df: DataFrame): (org.apache.spark.rdd.RDD[InternalRow], DataFrame) = {
     val rdd = df.queryExecution.toRdd.map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+    (rdd, classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
       org.apache.spark.sql.execution.LogicalRDD
-        .fromDataset(rdd, df.asInstanceOf[classic.Dataset[_]], isStreaming = false))
+        .fromDataset(rdd, df.asInstanceOf[classic.Dataset[_]], isStreaming = false)))
   }
 
   /** Register a NATIVE Catalyst expression under a SQL-callable name (the
