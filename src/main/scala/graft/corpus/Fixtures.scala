@@ -41,7 +41,7 @@ object Fixtures {
     * given: a schema-less parquet read runs a Spark job to infer it from
     * the file footers, once per read.
     */
-  val DocumentsSchema: StructType = StructType(Seq(
+  private val DocumentsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType), StructField("lang", StringType),
     StructField("source", StringType), StructField("n_chars", LongType)))
 
